@@ -15,6 +15,8 @@ import org.apache.spark.sql.SparkSession
   *    splitting and shuffle coalescing for free
   *  - `GraftExtensions` injects the codegen expressions into every
   *    session without per-call registration
+  *  - [[localFileSystemConf]] routes the `file` scheme to the fork-free
+  *    local filesystem (HDFS/S3 schemes are untouched)
   *
   * INTENDED CLUSTER DEFAULTS (VERDICT r15 ask #8 — recorded here so the
   * r15 unpin survives refactors; GraftSessionSpec asserts [[builder]]
@@ -39,6 +41,16 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** The `file` scheme's `FileSystem` and `AbstractFileSystem`
+    * (`FileContext`, used by streaming checkpoints), as Spark configs:
+    * [[ForkFreeLocalFileSystem]] and [[ForkFreeLocalFs]] keep Hadoop's
+    * local semantics and checksums without a process start per created
+    * file or renamed checkpoint.
+    */
+  val localFileSystemConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
+
   /** Cluster-agnostic builder: deliberately does NOT set
     * `spark.sql.shuffle.partitions` (review finding r15: sizing it to
     * the DRIVER's core count pinned every exchange on a 400-core
@@ -54,6 +66,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", classOf[graft.expressions.GraftExtensions].getName)
+      .config(localFileSystemConf)
 
   /** Local session for tests/tools. */
   def local(threads: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

@@ -16,12 +16,11 @@ import org.apache.spark.sql.types._
   *       → vector-store rows (K1 payload schema)
   * }}}
   *
-  * Scale design: every stage is partition-parallel except two known
-  * exchanges — enrich's total_chunks window (hash-partitioned by
-  * doc_id; chunk counts are per-doc facts, so the shuffle moves
-  * chunk-sized rows once) and the optional sink partitioning (the old
-  * "only shuffle is the sink" claim under-counted — review finding
-  * r15). Providers are instantiated once per
+  * Scale design: filter → chunk → enrich → embed is one narrow stage
+  * with no exchange, so it runs on every input partition. Each chunker
+  * emits its document's `total_chunks` next to the chunks it explodes
+  * (a per-row fact, not a window over doc_id); the only shuffle is an
+  * optional sink partitioning. Providers are instantiated once per
   * partition (connection reuse) and batched at
   * [[PipelineSettings.embedBatchSize]] (reference batch=50,
   * process_embedding.py:356). Point ids are content-addressed
@@ -66,6 +65,16 @@ object IngestPipeline {
       .filter(!emptyTextPred)                // F10
       .filter(!tooLargePred(settings))       // F2
 
+  /** Start offset of the last fixed-stride chunk of `text` (0 when the
+    * text is empty or null: such a document still gets one chunk).
+    */
+  private def lastChunkStart = greatest(length(col("text")) - 1, lit(0)).cast("long")
+
+  /** Chunks the fixed-stride chunker cuts from `text`: the size of its
+    * start sequence, `floor(max(len - 1, 0) / stride) + 1`.
+    */
+  private def fixedChunkTotal(stride: Int) = (floor(lastChunkStart / stride) + 1).cast("long")
+
   /** Fixed-stride chunk relation — fully native (posexplode over a
     * sequence), SQL-mirrorable for the oracle gate.
     */
@@ -73,10 +82,10 @@ object IngestPipeline {
     requireChunkGeometry(size, overlap)
     val stride = size - overlap
     files.select(
-      col("doc_id"), col("source"), col("text"),
-      posexplode(sequence(lit(0L), greatest(length(col("text")) - 1, lit(0)).cast("long"),
-        lit(stride.toLong))).as(Seq("chunk_index", "start")))
-      .select(col("doc_id"), col("source"), col("text"),
+      col("doc_id"), col("source"), col("text"), fixedChunkTotal(stride).as("total_chunks"),
+      posexplode(sequence(lit(0L), lastChunkStart, lit(stride.toLong)))
+        .as(Seq("chunk_index", "start")))
+      .select(col("doc_id"), col("source"), col("text"), col("total_chunks"),
         col("chunk_index").cast("long").as("chunk_index"),
         col("text").substr(col("start") + 1, lit(size)).as("chunk_text"))
   }
@@ -97,15 +106,26 @@ object IngestPipeline {
   /** Recursive (G1) chunk relation — compiled generator UDF. */
   def recursiveChunkRel(files: DataFrame, size: Int = 200, overlap: Int = 40): DataFrame = {
     requireChunkGeometry(size, overlap)
-    val chunkUdf = udf((text: String) => graft.text.RecursiveChunker.chunk(text, size, overlap))
-    files.select(col("doc_id"), col("source"), col("text"),
-      posexplode(chunkUdf(col("text"))).as(Seq("chunk_index", "chunk_text")))
+    udfChunkRel(files, graft.text.RecursiveChunker.chunk(_, size, overlap))
+  }
+
+  /** Chunk relation of a row-at-a-time chunker, called once per document:
+    * its chunk array feeds both `total_chunks` (the array's size) and
+    * the posexplode.
+    */
+  private[pipeline] def udfChunkRel(files: DataFrame, chunker: String => Seq[String]): DataFrame = {
+    val chunkUdf = udf(chunker)
+    files.select(col("doc_id"), col("source"), col("text"), chunkUdf(col("text")).as("chunks"))
+      .select(col("doc_id"), col("source"), col("text"),
+        size(col("chunks")).cast("long").as("total_chunks"),
+        posexplode(col("chunks")).as(Seq("chunk_index", "chunk_text")))
       .withColumn("chunk_index", col("chunk_index").cast("long"))
   }
 
-  /** Enrichment stage over a chunk relation: context prefix (P10 stub),
+  /** Enrichment stage over a chunk relation that carries each row's
+    * document `total_chunks` (A4): context prefix (P10 stub),
     * embedded-text concat (P11), content-addressed point ids (T6),
-    * language flags (P4/P17), per-doc chunk totals (A4).
+    * language flags (P4/P17).
     */
   def enrich(
       chunkRel: DataFrame,
@@ -113,8 +133,6 @@ object IngestPipeline {
       context: ContextProvider = new HeadlineContextProvider): DataFrame = {
     val ctxUdf = udf((head: String, chunk: String) => context.contextFor(head, chunk))
     chunkRel
-      .withColumn("total_chunks", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))))
       .withColumn("context_prefix",
         ctxUdf(substring(col("text"), 1, settings.contextDocTruncation), col("chunk_text")))
       .withColumn("embedded_text",                                             // P11
@@ -220,8 +238,14 @@ object IngestPipeline {
   /** Job ledger (T2/T5 as data, not control flow): one row per input
     * file with terminal status and counters (A4). `Failed` captures the
     * filter reason the reference would have error-logged. Chunk totals
-    * use the fixed-stride formula (floor((len-1)/stride)+1) so the whole
-    * ledger stays native-expression and SQL-mirrorable.
+    * are [[fixedChunkRel]]'s own count (floor((len-1)/stride)+1), so the
+    * whole ledger stays native-expression and SQL-mirrorable. They are a
+    * prediction, not an observation: they equal the totals of
+    * `run(files, fixedChunker = true)` only. The default `run(files)`
+    * chunks recursively, and its totals differ wherever the recursive
+    * chunker packs a document into a different number of chunks (about
+    * a quarter of the benchmark's ingest uploads). A ledger observed
+    * from the real run is ROADMAP item 5.
     */
   def ledger(
       files: DataFrame,
@@ -229,8 +253,8 @@ object IngestPipeline {
       chunkSize: Option[Int] = None,
       chunkOverlap: Option[Int] = None): DataFrame = {
     // geometry defaults FROM SETTINGS (ADVICE r14): run() takes chunk
-    // geometry from settings, so a caller pairing run(files) with
-    // ledger(files) under defaults must get total_chunks computed under
+    // geometry from settings, so ledger(files) and
+    // run(files, fixedChunker = true) under defaults count chunks under
     // the SAME geometry — independent parameter defaults (200/40) had
     // the two silently disagree once run() switched to settings
     val cs = chunkSize.getOrElse(settings.chunkSize)
@@ -259,8 +283,7 @@ object IngestPipeline {
       // total_chunks for work that never happened — run() filters it
       // out and ledgerStages fails it before 'Chunking'; summing the
       // ledger's counter overcounted)
-      when(!emptyText && !tooLarge,
-        (floor((length(col("text")) - 1) / stride) + 1).cast("long"))
+      when(!emptyText && !tooLarge, fixedChunkTotal(stride))
         .otherwise(lit(0L)).as("total_chunks"))
       .withColumn("progress_percent",
         when(col("status") === "Completed", lit(100.0)).otherwise(lit(0.0)))

@@ -37,6 +37,9 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(opts.get("spark.sql.adaptive.enabled").contains("true"))
     assert(opts.get("spark.sql.files.maxPartitionBytes").contains("134217728"))
     assert(opts("spark.sql.extensions").contains("GraftExtensions"))
+    assert(opts.get("spark.hadoop.fs.file.impl").contains(classOf[ForkFreeLocalFileSystem].getName))
+    assert(opts.get("spark.hadoop.fs.AbstractFileSystem.file.impl")
+      .contains(classOf[ForkFreeLocalFs].getName))
   }
 
 }

@@ -20,6 +20,9 @@ object SparkTestSession {
     // Driver-side listStatus over local tmpfs is faster at any count a
     // spec produces; the production default is untouched.
     .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "2048")
+    // the engine's own `file` filesystem, so the crash/replay specs run
+    // on what GraftSession.builder ships
+    .config(graft.GraftSession.localFileSystemConf)
     .appName("graft-test")
     .getOrCreate()
 }
@@ -58,7 +61,8 @@ class ProvidersSpec extends AnyFunSuite {
   }
 }
 
-class IngestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IngestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
   import org.apache.spark.sql.functions._
 
@@ -90,6 +94,77 @@ class IngestPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(idx.toSeq == (0L until idx.length).toSeq)
       assert(rs.forall(_.getAs[Long]("total_chunks") == rs.length))
     }
+  }
+
+  /** Docs for the chunk-total specs at 200/40 geometry (stride 160):
+    * empty, blank, one chunk, the 160/161-char stride boundary, and
+    * multi-chunk.
+    */
+  private def chunkDocs() = {
+    val s = spark
+    import s.implicits._
+    Seq(
+      (10L, ""), (11L, "   "), (12L, "tiny doc"),
+      (13L, "a" * 160), (14L, "a" * 161),
+      (15L, ("alpha beta gamma " * 30).trim),
+      (16L, ("x" * 9 + " ") * 60)
+    ).toDF("doc_id", "text").withColumn("source", lit("s"))
+  }
+
+  test("both chunkers' total_chunks equals count(*) OVER (PARTITION BY doc_id)") {
+    val byWindow = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
+    for ((name, rel) <- Seq(
+        "fixed" -> IngestPipeline.fixedChunkRel(chunkDocs(), 200, 40),
+        "recursive" -> IngestPipeline.recursiveChunkRel(chunkDocs(), 200, 40))) {
+      val rows = rel.withColumn("window_total", count(lit(1)).over(byWindow)).collect()
+      assert(rows.nonEmpty)
+      rows.foreach { r =>
+        assert(r.getAs[Long]("total_chunks") == r.getAs[Long]("window_total"), s"$name: $r")
+      }
+      val totals = rows.map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("total_chunks")).toMap
+      if (name == "fixed")
+        assert(totals == Map(10L -> 1L, 11L -> 1L, 12L -> 1L, 13L -> 1L, 14L -> 2L, 15L -> 4L,
+          16L -> 4L))
+      else {
+        assert(!totals.contains(10L) && !totals.contains(11L), "blank docs emit no chunk")
+        assert(totals(12L) == 1L && totals(15L) > 1L && totals(16L) > 1L)
+      }
+    }
+  }
+
+  test("the chunker UDF runs once per document through enrich and embed") {
+    val calls = spark.sparkContext.longAccumulator("chunker-calls")
+    val rel = IngestPipeline.udfChunkRel(chunkDocs(), { text =>
+      calls.add(1)
+      graft.text.RecursiveChunker.chunk(text, 200, 40)
+    })
+    IngestPipeline.embedStage(IngestPipeline.enrich(rel))
+      .write.format("noop").mode("overwrite").save()
+    assert(calls.value == chunkDocs().count())
+  }
+
+  test("run() is one narrow stage: its executed plan has no Exchange") {
+    for (fixed <- Seq(false, true)) {
+      val out = IngestPipeline.run(files(), fixedChunker = fixed)
+      out.collect()
+      val plan = out.queryExecution.executedPlan
+      assert(collect(plan) { case e: org.apache.spark.sql.execution.exchange.Exchange => e }.isEmpty,
+        plan.treeString)
+    }
+  }
+
+  test("a doc_id on two input rows: each row counts its own chunks") {
+    val s = spark
+    import s.implicits._
+    // the old count(*) OVER (PARTITION BY doc_id) gave both rows 4 + 1
+    val dup = Seq(
+      (7L, "long", "en", 509L, ("alpha beta gamma " * 30).trim),
+      (7L, "short", "en", 8L, "tiny doc")
+    ).toDF("doc_id", "source", "lang", "n_chars", "text")
+    val totals = IngestPipeline.run(dup, graft.PipelineSettings.smallDocs, fixedChunker = true)
+      .select("source_title", "total_chunks").distinct().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(totals == Map("long" -> 4L, "short" -> 1L))
   }
 
   test("payload truncation caps text at the configured limit") {
