@@ -41,7 +41,11 @@ object BatchSink {
     val data =
       if (extraPartitionCols.nonEmpty) df.repartition(extraPartitionCols.map(col): _*)
       else df
-    val w = data.withColumn("batch_id", lit(batchId))
+    // a string literal: codegen inlines a long literal into the
+    // generated Java (a cache miss and a Janino compile per new batch id)
+    // but holds a string by reference; the `batch_id=N` directory is the
+    // same for both
+    val w = data.withColumn("batch_id", lit(batchId.toString))
       .write.mode("overwrite")
       .partitionBy("batch_id" +: extraPartitionCols: _*)
       .option("partitionOverwriteMode", if (full) "static" else "dynamic")

@@ -232,13 +232,6 @@ object Bench {
     val sameCode = historySameCodeMins(historyPath, sfDir, srcFp)
     def rerunRef(name: String): Option[Double] =
       (medians.get(name).toSeq ++ sameCode.get(name).toSeq).minOption
-    // Cold-artifact mode (r20, VERDICT r19 what's-wrong #3): clear this
-    // corpus's on-disk DiskArtifacts generations BEFORE the first pass so
-    // every artifact consumer pays its true build cost this run. The
-    // warm/cold state is self-reported either way via artifact_hits /
-    // artifact_builds in the output line.
-    val coldArtifacts = sys.env.get("SPARK_GRAFT_COLD_ARTIFACTS").exists(_.nonEmpty)
-    if (coldArtifacts) graft.operators.DiskArtifacts.clearCorpusArtifacts(sfDir)
     val spark = GraftSession.local(cpus.toInt)
     // Warm the session (codegen compiler, parquet footers, broadcast
     // machinery) so the first timed query isn't charged for it.
@@ -336,15 +329,11 @@ object Bench {
     val total = totalOf(merged)
     val runTotal = totalOf(results)
     val ts = java.time.Instant.now().toString
-    // artifact warmth recorded in the banked line too (the fields sit
-    // BEFORE the queries object, which perQuerySamples parses by the
-    // first "}" after "queries":{ — nothing may follow that object but
-    // "sf")
+    // perQuerySamples parses the queries object by the first "}" after
+    // "queries":{ — nothing may follow that object but "sf"
     val line =
       s"""{"metric":"total","value":$runTotal,"unit":"sec","ts":"$ts","reruns":$reruns,"passes":$passes,"src":"$srcFp",""" +
-        s""""artifact_hits":${graft.operators.DiskArtifacts.artifactHits},""" +
-        s""""artifact_builds":${graft.operators.DiskArtifacts.artifactBuilds},""" +
-        s""""cold_artifacts":$coldArtifacts,"queries":$qs,"sf":"$sfDir"}"""
+        s""""queries":$qs,"sf":"$sfDir"}"""
     // Contention telemetry (VERDICT r5 #7): the artifact run can land in
     // a fully-contended window the rerun budget can't flatten (r3/r4/r5
     // all did), so the summary also reports the sum of per-query
@@ -376,20 +365,12 @@ object Bench {
       System.err.println(s"[bench] ${failedQueries.size} queries FAILED every attempt " +
         s"(their cost is MISSING from all totals): ${failedQueries.mkString(", ")}")
     val failedJson = failedQueries.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // artifact warmth self-report (r20, VERDICT r19 what's-wrong #3):
-    // hits = DiskArtifacts calls served from a committed tmp generation,
-    // builds = calls that computed in-memory. A warm-tmp run shows
-    // hits >> builds; a cold run (SPARK_GRAFT_COLD_ARTIFACTS=1, or a
-    // fresh tmpdir) shows builds > 0 for every artifact owner.
-    val aHits = graft.operators.DiskArtifacts.artifactHits
-    val aBuilds = graft.operators.DiskArtifacts.artifactBuilds
     val shortLine =
       s"""{"metric":"total","value":$runTotal,"unit":"sec","ts":"$ts","reruns":$reruns,"passes":$passes,""" +
         s""""pass_totals":${passTotalsJson(passTotals.toSeq)},""" +
         s""""nqueries":${results.size},"failed":${failedQueries.size},"failed_queries":$failedJson,""" +
         s""""run_total":$runTotal,"merged_total":$total,"merged_from_history":$nMerged,""" +
         s""""best_known_total":$bestKnown,"canaries_clean":$canariesClean,""" +
-        s""""artifact_hits":$aHits,"artifact_builds":$aBuilds,"cold_artifacts":$coldArtifacts,""" +
         s""""queries":$worstQs,"sf":"$sfDir"}"""
     // Full per-query record to a file too: the driver's stdout capture
     // truncates long tails, which made round-2 timings unrecoverable.

@@ -75,6 +75,27 @@ object Tables {
     if (df.rdd.getNumPartitions < par) df.repartition(par) else df
   }
 
+  /** `kernel(df).orderBy(keys)` with the kernel run once per row. A
+    * trailing `orderBy` range-partitions the kernel's OUTPUT, and the
+    * range partitioner samples its input by running it: the whole
+    * kernel ran twice on one task, once in the sampler and once for
+    * real. Here `df` itself is range-split by `keys` into
+    * `defaultParallelism` partitions (an explicit count, which AQE does
+    * not coalesce), sorted within them, and only then passed through
+    * `kernel` — the sampler scans only the cheap input, and the kernel
+    * runs spread over every partition.
+    *
+    * PRECONDITION: `kernel` is a per-row projection of `df` (select /
+    * withColumn) that keeps `keys`; anything that moves rows between
+    * partitions or reorders them (a join, aggregate or sort) breaks the
+    * ordering this returns.
+    */
+  def sortedKernel(df: DataFrame, keys: Seq[String])(kernel: DataFrame => DataFrame): DataFrame = {
+    val ks = keys.map(col)
+    kernel(df.repartitionByRange(df.sparkSession.sparkContext.defaultParallelism, ks: _*)
+      .sortWithinPartitions(ks: _*))
+  }
+
   def events(spark: SparkSession, dir: String): DataFrame = {
     // SESSION-WIDE by necessity (review finding r15, documented rather
     // than papered over): the conf must hold at ACTION time — the scan

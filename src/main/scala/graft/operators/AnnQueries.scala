@@ -416,7 +416,7 @@ object AnnQueries {
     // — a subspace using 2 of 8 entries is quantizing nothing), and
     // total codes.
     "ann_codebook_build" -> ((s, d) => {
-      val ((cbs, codes), _) = diskPqArtifacts(s, d)
+      val (cbs, codes) = buildPqArtifacts(s, d)
       SessionArtifacts.seed(pqArtifactsCache, s, "pq", d, (cbs, codes))
       val narrow = (0 until AnnPq.M).map(m =>
         codes.select(lit(m).as("m"), col(s"c$m").as("code"))).reduce(_ unionByName _)
@@ -508,28 +508,21 @@ object AnnQueries {
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
       val cellCv = cents.select(col("c_id").as("cell"), col("cv"))
       // the corpus-wide residual artifacts (assignment -> residuals ->
-      // residual-space codebooks -> ADC codes) through the disk store:
-      // every stage is a pure, deterministic corpus function (zip_with
-      // double arithmetic, argmin encode), so disk == fresh; the probe
-      // side below stays inline — it is queries-sized
-      val (m, _) = DiskArtifacts.loadOrBuildMany(s, d, "ann_pq_residual",
-        Seq("codebooks", "codes_cell")) {
-        val asg = AnnIndex.assign(e, cents).select(col("vec_id"), col("cell"))
-        val resid = e.join(asg, Seq("vec_id"))
-          .join(broadcast(cellCv), Seq("cell"))
-          .select(col("vec_id"), col("cell"),
-            zip_with(col("embedding"), col("cv"),
-              (x, y) => x.cast("double") - y.cast("double")).as("embedding"))
-        // residual-space stand-in codebooks from ids 10..17 — DISJOINT
-        // from the centroid slice (a centroid's own residual is zero;
-        // the default 100..107 slice would make every codebook entry
-        // the zero vector and the ADC ranking a pure vec_id tiebreak —
-        // review finding, empirically confirmed)
-        val cbs = AnnPq.codebooks(resid, baseId = 10L).localCheckpoint()
-        Map("codebooks" -> cbs,
-          "codes_cell" -> AnnPq.encode(resid, cbs).join(asg, Seq("vec_id")))
-      }
-      val (cbs, codesWithCell) = (m("codebooks"), m("codes_cell"))
+      // residual-space codebooks -> ADC codes); the probe side below
+      // is queries-sized
+      val asg = AnnIndex.assign(e, cents).select(col("vec_id"), col("cell"))
+      val resid = e.join(asg, Seq("vec_id"))
+        .join(broadcast(cellCv), Seq("cell"))
+        .select(col("vec_id"), col("cell"),
+          zip_with(col("embedding"), col("cv"),
+            (x, y) => x.cast("double") - y.cast("double")).as("embedding"))
+      // residual-space stand-in codebooks from ids 10..17 — DISJOINT
+      // from the centroid slice (a centroid's own residual is zero;
+      // the default 100..107 slice would make every codebook entry
+      // the zero vector and the ADC ranking a pure vec_id tiebreak —
+      // review finding, empirically confirmed)
+      val cbs = AnnPq.codebooks(resid, baseId = 10L).localCheckpoint()
+      val codesWithCell = AnnPq.encode(resid, cbs).join(asg, Seq("vec_id"))
       val probeLuts = AnnIndex.probe(queries0, cents, nprobe = 2)
         .join(broadcast(cellCv), Seq("cell"))
         .select(col("q_id"), col("cell"),
@@ -740,51 +733,38 @@ object AnnQueries {
   // cap + key + clear-on-overflow policy shared via SessionArtifacts
   private val pqArtifactsCache =
     new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
-  /** Disk-backed cold path (VERDICT r15 ask #1): codebooks + codes are
-    * one atomic artifact (codes are meaningless against other
-    * codebooks), persisted once per corpus fingerprint.
+  /** Codebooks + codes, built together (codes are meaningless against
+    * other codebooks).
     */
-  private def diskPqArtifacts(s: SparkSession, d: String)
-      : ((DataFrame, DataFrame), Boolean) = {
-    val (m, hit) = DiskArtifacts.loadOrBuildMany(s, d, "ann_pq_raw",
-      Seq("codebooks", "codes")) {
-      val e = Tables.embeddings(s, d)
-      val cbs = AnnPq.codebooks(e).localCheckpoint()
-      Map("codebooks" -> cbs, "codes" -> AnnPq.encode(e, cbs).localCheckpoint())
-    }
-    ((m("codebooks"), m("codes")), hit)
+  private def buildPqArtifacts(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val e = Tables.embeddings(s, d)
+    val cbs = AnnPq.codebooks(e).localCheckpoint()
+    (cbs, AnnPq.encode(e, cbs).localCheckpoint())
   }
 
   private def rawPqArtifacts(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    SessionArtifacts.cached(pqArtifactsCache, s, "pq", d)(diskPqArtifacts(s, d)._1)
+    SessionArtifacts.cached(pqArtifactsCache, s, "pq", d)(buildPqArtifacts(s, d))
 
   private val kmeansCache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def diskTrainedCents(s: SparkSession, d: String): (DataFrame, Boolean) =
-    DiskArtifacts.loadOrBuild(s, d, "kmeans16") {
-      AnnIndex.kmeans(Tables.embeddings(s, d), 16, TrainedAuditIters)
-        .localCheckpoint()
-    }
+  private def buildTrainedCents(s: SparkSession, d: String): DataFrame =
+    AnnIndex.kmeans(Tables.embeddings(s, d), 16, TrainedAuditIters).localCheckpoint()
 
   private def trainedCents(s: SparkSession, d: String): DataFrame =
-    SessionArtifacts.cached(kmeansCache, s, "kmeans", d)(diskTrainedCents(s, d)._1)
+    SessionArtifacts.cached(kmeansCache, s, "kmeans", d)(buildTrainedCents(s, d))
 
   /** recall@3 of the IVF path under the TRAINED coarse quantizer
     * (k=16, [[TrainedAuditIters]] rounds of [[AnnIndex.kmeans]]),
     * queries vec_id<10 over the whole corpus minus self — the
     * trained-path counterpart of [[annRecall]]'s `ivf` rows. The
-    * recorded owner of the training loop through the disk store
-    * (VERDICT r15 ask #1): a new corpus trains COLD in this query's
-    * number; a fingerprint-matched one loads the persisted centroids
-    * (training is bit-deterministic — the float-cast absorption the
-    * DuckDB kmeansCtes replay already depends on — so disk == fresh).
-    * Seeds [[kmeansCache]] for the consumers either way.
+    * recorded owner of the training loop: every run trains COLD in
+    * this query's number and seeds [[kmeansCache]] for the consumers.
     */
   def annRecallTrained(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val (cents, _) = diskTrainedCents(s, d)
+    val cents = buildTrainedCents(s, d)
     SessionArtifacts.seed(kmeansCache, s, "kmeans", d, cents)
     val approx = AnnIndex.searchAssigned(
       AnnIndex.assign(e, cents), AnnIndex.probe(q, cents, nprobe = 2), k = 3)

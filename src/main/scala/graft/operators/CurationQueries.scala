@@ -248,20 +248,14 @@ object CurationQueries {
   private val langTbCache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def langBucketCounts(s: SparkSession, d: String): DataFrame =
-    SessionArtifacts.cached(langTbCache, s, "langtb", d)(diskLangTb(s, d)._1)
+    SessionArtifacts.cached(langTbCache, s, "langtb", d)(buildLangTb(s, d))
 
-  /** The (doc_id, bucket, n) token-count relation through the disk
-    * store (r16, the dedup_artifact_build discipline extended): the
-    * tokenize + hash pass over the whole corpus is the lang trio's one
-    * corpus-sized build; content-keyed persistence makes warm sessions
-    * pay a parquet read.
+  /** The (doc_id, bucket, n) token-count relation of a corpus table:
+    * the tokenize + hash pass over the whole corpus is the lang trio's
+    * one corpus-sized build (widened in r20).
     */
-  private def diskLangTb(s: SparkSession, d: String): (DataFrame, Boolean) =
-    DiskArtifacts.loadOrBuild(s, d, "lang_tb") {
-      // widened (r20): the cold tokenize+hash build is the lang trio's
-      // one corpus-sized kernel; the warm path reads parquet instead
-      langBucketCountsOf(Tables.widen(Tables.documents(s, d))).localCheckpoint()
-    }
+  private def buildLangTb(s: SparkSession, d: String): DataFrame =
+    langBucketCountsOf(Tables.widen(Tables.documents(s, d))).localCheckpoint()
 
   /** Batch sufficient statistics: per-(lang, bucket) token counts over
     * the batch's TRAIN docs — a sum-monoid over disjoint doc batches
@@ -854,15 +848,14 @@ object CurationQueries {
     // is the RECORDED COLD OWNER of the trio's shared bucket-count
     // artifact (the dedup_artifact_build discipline — a session cache
     // with no always-cold owner hides its build cost from every bench
-    // number, review finding r14): a new/changed corpus pays the full
-    // tokenize + hash pass via [[diskLangTb]] in THIS query's number, a
-    // fingerprint-matched one pays the parquet load (r16 disk store),
-    // and either way it SEEDS [[langTbCache]]; the two consumers that
-    // sort after it (lang_classifier_model / lang_confusion_trained)
-    // hit the session cache.
+    // number, review finding r14): every run pays the full tokenize +
+    // hash pass via [[buildLangTb]] in THIS query's number and SEEDS
+    // [[langTbCache]]; the two consumers that sort after it
+    // (lang_classifier_model / lang_confusion_trained) hit the session
+    // cache.
     "lang_classifier" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val (tb, _) = diskLangTb(s, d)
+      val tb = buildLangTb(s, d)
       SessionArtifacts.seed(langTbCache, s, "langtb", d, tb)
       val preds = langScoreFrom(tb, langCountsFrom(tb, langLabels(docs)),
         langPriorsOf(docs))

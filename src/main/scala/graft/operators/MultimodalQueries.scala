@@ -577,13 +577,13 @@ object MultimodalQueries {
     // sampled corner pixels of the decoded RESIZED raster must match
     // the oracle's integer replay of the NN source mapping.
     "mm_resize" -> ((s, d) => {
-      Tables.documents(s, d)
-        .select(col("doc_id"), resizeRoundtripUdf(col("doc_id"), col("n_chars")).as("m"))
-        .select(col("doc_id"), col("m._1").as("format"),
-          col("m._2").as("src_w"), col("m._3").as("src_h"),
-          col("m._4").as("dst_w"), col("m._5").as("dst_h"),
-          col("m._6").as("tl_gray"), col("m._7").as("br_gray"))
-        .orderBy("doc_id")
+      Tables.sortedKernel(Tables.documents(s, d).select("doc_id", "n_chars"), Seq("doc_id")) {
+        _.select(col("doc_id"), resizeRoundtripUdf(col("doc_id"), col("n_chars")).as("m"))
+          .select(col("doc_id"), col("m._1").as("format"),
+            col("m._2").as("src_w"), col("m._3").as("src_h"),
+            col("m._4").as("dst_w"), col("m._5").as("dst_h"),
+            col("m._6").as("tl_gray"), col("m._7").as("br_gray"))
+      }
     }),
     // Real-codec feature extraction: 8-bucket gray histogram + mean
     // over the decoded raster, replayed pixel-for-pixel by the oracle.

@@ -349,14 +349,14 @@ object TextQueries {
     }),
     // Text-analysis extension: token counting (whitespace + BPE-ish regex).
     "token_count" -> ((s, d) => {
-      Tables.documents(s, d)
-        .select(
+      Tables.sortedKernel(Tables.documents(s, d).select("doc_id", "text", "n_chars"), Seq("doc_id")) {
+        _.select(
           col("doc_id"),
           TextOps.wordCount(col("text")).as("ws_tokens"),
           size(regexp_extract_all(col("text"),
             lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0))).cast("long").as("regex_tokens"),
           ceil(col("n_chars") / 4.0).cast("long").as("est_bpe_tokens"))
-        .orderBy("doc_id")
+      }
     }),
     // Text-analysis extension: document fingerprinting (exact-dedup key).
     "fingerprint" -> ((s, d) => {

@@ -7,9 +7,8 @@ import org.apache.spark.sql.SparkSession
   * salt is load-bearing — two JVMs on the same corpus (bench + verify)
   * must not share a checkpoint — but it also means every JVM leaves a
   * full artifact set (staged corpus copy + landed partitions +
-  * checkpoint) behind, and unlike [[DiskArtifacts]] staging nothing
-  * reaped it (ADVICE r16): repeated bench runs accumulated unbounded
-  * tmp usage. Two mechanisms close that:
+  * checkpoint) behind, and nothing reaped it (ADVICE r16): repeated
+  * bench runs accumulated unbounded tmp usage. Two mechanisms close that:
   *
   *  - a JVM shutdown hook deletes every dir this session salted — the
   *    normal-exit path leaves nothing behind;

@@ -951,8 +951,9 @@ object EventStreams {
     *
     * Read-back contract: `batch_id` is a PARTITION column — partition
     * type inference reads it as an integer at the END of the schema
-    * (not the long this writer stamps). Consumers should select it by
-    * name and cast, never by position or assumed long type.
+    * (whatever type the writer stamped; only the `batch_id=N` directory
+    * name is stored). Consumers should select it by name and cast,
+    * never by position or assumed long type.
     */
   private def writeBatchPartition(df: DataFrame, batchId: Long, dir: String): Unit =
     graft.BatchSink.writeBatch(df, batchId, dir, full = false)

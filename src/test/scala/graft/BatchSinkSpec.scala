@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * dataless swap); promotion must key on BatchSink's OWN commit
   * sentinel, not the committer's overridable `_SUCCESS`; and the live
   * partial fold `compactBelow` must move only `batch_id < upTo` rows
-  * while every id `>= upTo` stays put.
+  * while every id `>= upTo` stays put. And a new batch id must not cost
+  * a fresh codegen compile: the relay writes one batch per micro-batch.
   */
 class BatchSinkSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -76,5 +77,32 @@ class BatchSinkSpec extends AnyFunSuite {
     // idempotent / no-op when only one foldable partition remains
     BatchSink.compactBelow(spark, dir, upTo = 3L)
     assert(BatchSink.batchIds(spark, dir).toSet === Set(2L, 3L))
+  }
+
+  test("a new batch id reuses the generated code; layout and read-back unchanged") {
+    import spark.implicits._
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val base = tmp("graft-sink-codegen")
+    // a parquet source, as the relay's micro-batches are: a local
+    // relation would be folded at planning time and never codegen'd
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$base/in")
+    val in = spark.read.parquet(s"$base/in")
+    val dir = s"$base/t"
+    BatchSink.writeBatch(in, 7L, dir, full = false) // warms the codegen cache
+    val c0 = METRIC_COMPILATION_TIME.getCount
+    BatchSink.writeBatch(in, 8L, dir, full = false)
+    assert(METRIC_COMPILATION_TIME.getCount === c0, "a new batch id compiled new code")
+    assert(BatchSink.batchIds(spark, dir).toSet === Set(7L, 8L))
+    val (fs, _) = fsPath(dir)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/batch_id=8")))
+    val back = spark.read.parquet(dir)
+    assert(back.schema.last.name === "batch_id")
+    assert(back.select(col("id"), col("v"), col("batch_id").cast("long")).as[(Long, String, Long)]
+      .collect().toSet === Set((1L, "a", 7L), (2L, "b", 7L), (1L, "a", 8L), (2L, "b", 8L)))
+    // positive control: the metric sees the compile a new LONG literal costs
+    in.withColumn("batch_id", lit(7L)).write.parquet(s"$base/ctl7")
+    val c1 = METRIC_COMPILATION_TIME.getCount
+    in.withColumn("batch_id", lit(8L)).write.parquet(s"$base/ctl8")
+    assert(METRIC_COMPILATION_TIME.getCount > c1, "the compile probe is not live")
   }
 }

@@ -148,6 +148,18 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("mm_resize: the codec UDF runs above the range exchange, never in its sampler") {
+    // Tables.sortedKernel: the range split sees only (doc_id, n_chars);
+    // a codec UDF below the exchange would run twice, once in the
+    // range sampler
+    val lines = finalPlan("mm_resize").split("== Initial Plan ==").head.linesIterator.toSeq
+    val exchange = lines.indexWhere(_.contains("Exchange rangepartitioning"))
+    val udfs = lines.indices.filter(i => lines(i).contains("UDF("))
+    assert(exchange >= 0 && udfs.nonEmpty, lines.mkString("\n"))
+    assert(udfs.forall(_ < exchange), lines.mkString("\n"))
+    assert(lines.count(_.contains("Exchange")) == 1, lines.mkString("\n"))
+  }
+
   test("dsir_select: bounded top-N, ratio table broadcast, no corpus sort") {
     val p = finalPlan("dsir_select")
     // selection must lower to a per-partition top-N heap; the B-row
