@@ -1,382 +1,133 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark runner. Prints exactly ONE JSON line on stdout (the last line),
-  * of the shape {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
+import java.lang.management.ManagementFactory
+import java.util.Locale
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Benchmark runner over every query in [[SparkEntry.queries]].
   *
-  * Ambient-contention defense (round-3 artifact was a 4.8x-off outlier run):
-  *  - every query runs at least twice and the minimum is recorded — the min
-  *    of k runs is the closest observable to the uncontended cost;
-  *  - per-query reference times are same-sf medians of prior runs recorded
-  *    in tools/bench_history.jsonl; a best-of-2 still > OutlierFactor x its
-  *    reference gets up to MaxExtraReruns more attempts.
-  * The recorded total is the sum of per-query minima, not wall time.
+  * Each query is timed by [[time]]: [[Runs]] full noop writes in a row,
+  * so every row and column a query produces is computed (a row count
+  * lets Catalyst prune projected kernels) and nothing is persisted.
+  * Wall time of each run sits next to the process CPU time, so ambient
+  * contention shows in the run's own data instead of being guessed from
+  * earlier runs.
+  *
+  * Prints exactly ONE JSON line on stdout (the last line) — `value` is
+  * the sum of per-query minima, failed queries are listed and left out
+  * of every total — and appends the full per-query record to
+  * tools/bench_history.jsonl.
   */
 object Bench {
-  private val OutlierFactor = 1.5
-  private val MaxExtraReruns = 2
-  /** A whole-suite total this far above the denoised best-known total
-    * means the RUN landed in a contended window the per-query rerun
-    * budget couldn't flatten (r3–r6 artifacts were 1.6–1.9× off clean
-    * reruns of the same code); a full extra pass, minuted per query
-    * against the earlier ones, lands outside most contention windows at
-    * a bounded cost. 1.2 (was 1.3 through r7): a 62.1s run on a 48s
-    * best_known — 1.29×, visibly contended, 138 reruns — sailed under
-    * the 1.3 trigger by 0.3s; 1.2 is also the artifact-vs-best_known
-    * agreement the round gate actually wants. Up to [[MaxExtraPasses]]
-    * escapes, so the worst case stays bounded at ~3 suite passes.
-    */
-  private val SecondPassFactor = 1.2
-  private val MaxExtraPasses = 2
-  /** Contention CANARIES (VERDICT r10 #1): trivial single-projection
-    * queries whose plan cost cannot drift — if a canary's best-of-k
-    * still lands CanaryFactor above its own same-sf history median, the
-    * whole pass sat in a contended window that per-query reruns didn't
-    * flatten (the r10 artifact: p15_truncate 0.12 s → 1.00 s, 8×, while
-    * the suite total stayed under the SecondPassFactor trigger), so the
-    * run earns a full extra pass exactly like a blown total. Canary
-    * inflation can only be ambient — a real regression in a substr
-    * projection is not a thing — which is what makes this trigger safe
-    * to act on automatically.
-    */
-  private val Canaries = Seq("p15_truncate", "p16_char_count")
-  private val CanaryFactor = 3.0
-  /** The round gate is "raw run total within GateFactor × the baseline
-    * of record" (the FIRST history line — the round-1 suite at the same
-    * sf). VERDICT r13 #1c: the r13 artifact recorded 112.66 s against a
-    * 103.98 s line while byte-identical code had a 94.10 s best_known —
-    * it missed the SecondPassFactor trigger by 0.27 s and the breach
-    * was pure measurement. When the run total crosses the gate while
-    * the denoised best-known total is UNDER it, the run provably landed
-    * in contention the gate will still charge for — that earns a full
-    * extra pass exactly like a blown total or an inflated canary. A
-    * genuinely-over-gate suite (best_known also over) gets no extra
-    * passes from this: the breach is real and reruns can't fix it.
-    */
-  private val GateFactor = 2.0
-  /** Margin version of the gate trigger (VERDICT r16 ask #3): the r16
-    * artifact recorded 89.35 s against 76.7–80.3 s clean-window runs of
-    * the SAME code — noisy but under every trigger, so the noise became
-    * the round's number of record. A run total past 1.7× the baseline
-    * while the denoised best-known is under that line is already
-    * measurement, not regression; spend the extra pass BEFORE the 2×
-    * gate is at risk rather than exactly at it.
-    */
-  private val GateMarginFactor = 1.7
+  /** Timed runs per query. */
+  val Runs = 3
 
-  /** The one extra-pass decision (spec-pinned in BenchHistorySpec):
-    * Some(reason) when the suite deserves a full extra pass — blown
-    * total vs best_known, inflated canaries, or a gate/gate-margin
-    * breach that the denoised total proves is ambient. None when the
-    * run is clean OR genuinely slow (best_known also over the line —
-    * reruns can't fix real cost).
+  /** One query's timing: the wall seconds of each completed run and the
+    * process CPU seconds over all of them. `failed` when any run threw.
     */
-  private[graft] def extraPassReason(runTotal: Double, bestKnown: Double,
-                                     baseline: Double,
-                                     contended: Seq[String]): Option[String] =
-    if (bestKnown <= 0) None
-    else if (runTotal > SecondPassFactor * bestKnown)
-      Some(f"total $runTotal%.1fs > $SecondPassFactor%.1f x best_known $bestKnown%.1fs")
-    else if (contended.nonEmpty)
-      Some(s"canaries ${contended.mkString(",")} > ${CanaryFactor}x their medians")
-    else if (baseline > 0 && runTotal > GateMarginFactor * baseline &&
-             bestKnown <= GateMarginFactor * baseline)
-      Some(f"total $runTotal%.1fs over the $GateMarginFactor%.1fx gate margin " +
-        f"(baseline $baseline%.1fs) while best_known $bestKnown%.1fs is under it")
-    else if (baseline > 0 && runTotal > GateFactor * baseline &&
-             bestKnown <= GateFactor * baseline)
-      Some(f"total $runTotal%.1fs over the $GateFactor%.1fx gate (baseline " +
-        f"$baseline%.1fs) while best_known $bestKnown%.1fs is under it")
-    else None
+  final case class Timing(walls: Seq[Double], cpu: Double, failed: Boolean) {
+    def min: Double = walls.min
+    def median: Double = {
+      val s = walls.sorted
+      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+    }
+    def spread: Double = walls.max - walls.min
+    override def toString: String =
+      if (failed) "FAILED"
+      else f"min=$min%.3f median=$median%.3f spread=$spread%.3f cpu=$cpu%.3f " +
+        s"runs=${walls.map(w => f"$w%.3f").mkString(",")}"
+  }
 
-  /** Fingerprint of the library sources (src/main/scala, sorted paths +
-    * contents). History lines carry it so the artifact merge below can
-    * tell "same code, earlier run" apart from "different code" — only
-    * measurements of IDENTICAL sources are comparable run-to-run.
-    */
-  private def sourceFingerprint(): String = try {
-    val root = java.nio.file.Paths.get(sys.props.getOrElse("user.dir", "."),
-      "src", "main", "scala")
-    if (!java.nio.file.Files.isDirectory(root)) return "none"
-    val md = java.security.MessageDigest.getInstance("MD5")
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(root)
+  private val os = ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  /** The one query timer: [[Runs]] noop writes of `fn(spark, sfDir)`. */
+  def time(spark: SparkSession, sfDir: String, name: String,
+           fn: (SparkSession, String) => DataFrame): Timing = {
+    val walls = Seq.newBuilder[Double]
+    val cpu0 = os.getProcessCpuTime
+    def cpu = (os.getProcessCpuTime - cpu0) / 1e9
     try {
-      val files = walk.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
-      files.foreach { p =>
-        md.update(p.toString.getBytes("UTF-8"))
-        md.update(java.nio.file.Files.readAllBytes(p))
+      (1 to Runs).foreach { _ =>
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        walls += (System.nanoTime() - t0) / 1e9
       }
-    } finally walk.close() // Files.walk holds directory handles open
-    md.digest().map("%02x".format(_)).mkString.take(16)
-  } catch { case scala.util.control.NonFatal(_) => "none" }
-
-  /** Per-query MINIMA over history lines of the same sf AND the same
-    * source fingerprint (r12, VERDICT r11 #1b: the closing artifact ran
-    * 13.7% above best-known purely from ambient contention). The min of
-    * all same-code same-sf runs is the closest recorded observable to
-    * the uncontended cost — the artifact merge takes min(this run,
-    * these), while the history line always records the RAW run (merged
-    * values are never written back, so the estimator can't ratchet on
-    * itself, and any source change invalidates the whole merge set).
-    */
-  private[graft] def historySameCodeMins(path: java.nio.file.Path, sfDir: String,
-                                  srcFp: String): Map[String, Double] = {
-    if (srcFp == "none") return Map.empty
-    perQuerySamples(path, line =>
-      line.contains("\"src\":\"" + srcFp + "\"") &&
-        line.contains("\"sf\":\"" + sfDir + "\""))
-      .map { case (k, xs) => k -> xs.min }
-  }
-
-  /** The one JSONL per-query scanner behind [[historySameCodeMins]] and
-    * [[historyMedians]] (review finding r14: two hand-rolled copies of
-    * the fragile substring/regex parse could drift — any format change
-    * now lands in one place; the call sites keep only their line
-    * filter and their fold). Failed queries (-1) are skipped. The file
-    * is written only by this object, so the targeted regex over
-    * `"name":value` pairs inside the queries object is reliable.
-    */
-  private def perQuerySamples(path: java.nio.file.Path,
-                              lineFilter: String => Boolean): Map[String, List[Double]] = {
-    if (!java.nio.file.Files.exists(path)) return Map.empty
-    val pair = """"([A-Za-z0-9_]+)":(-?\d+(?:\.\d+)?(?:[eE]-?\d+)?)""".r
-    val samples = scala.collection.mutable.Map.empty[String, List[Double]]
-    try {
-      java.nio.file.Files.readAllLines(path).forEach { line =>
-        val qStart = if (lineFilter(line)) line.indexOf("\"queries\":{") else -1
-        if (qStart >= 0) {
-          val qEnd = line.indexOf("}", qStart)
-          val body = line.substring(qStart + "\"queries\":".length,
-            if (qEnd > 0) qEnd + 1 else line.length)
-          pair.findAllMatchIn(body).foreach { m =>
-            val v = m.group(2).toDouble
-            if (v >= 0) samples.updateWith(m.group(1))(xs => Some(v :: xs.getOrElse(Nil)))
-          }
-        }
-      }
-      samples.toMap
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
-  }
-
-  /** Total of the baseline of record: the FIRST history line at this sf
-    * (lines predating the "sf" field were all sf0.1 — same default as
-    * [[historyMedians]]). Returns -1 when no such line exists, which
-    * disables the gate trigger rather than guessing.
-    */
-  private[graft] def baselineTotal(path: java.nio.file.Path, sfDir: String): Double = {
-    if (!java.nio.file.Files.exists(path)) return -1.0
-    val value = """"value":(-?\d+(?:\.\d+)?(?:[eE]-?\d+)?)""".r
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.readAllLines(path).asScala
-        .find { line =>
-          if (line.contains("\"sf\":")) line.contains("\"sf\":\"" + sfDir + "\"")
-          else sfDir.endsWith("sf0.1")
-        }
-        .flatMap(l => value.findFirstMatchIn(l).map(_.group(1).toDouble))
-        .getOrElse(-1.0)
-    } catch { case scala.util.control.NonFatal(_) => -1.0 }
-  }
-
-  /** Per-query MEDIANS over same-scale history lines (r1/r2 lines
-    * predate the "sf" field and were all sf0.1 — missing means that
-    * default). One fold over [[perQuerySamples]].
-    */
-  private[graft] def historyMedians(path: java.nio.file.Path, sfDir: String): Map[String, Double] = {
-    perQuerySamples(path, line =>
-      if (line.contains("\"sf\":")) line.contains("\"sf\":\"" + sfDir + "\"")
-      else sfDir.endsWith("sf0.1"))
-      .map { case (k, xs) =>
-        val s = xs.sorted
-        k -> (if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0)
-      }
-  }
-
-  /** JSON array of per-pass suite totals for the artifact (VERDICT r14
-    * ask #4): entry 0 = the initial best-of-k pass's total; each later
-    * entry = that extra pass's own raw single-run total, BEFORE the
-    * cross-pass min-merge that produces run_total — so "pass 1 was
-    * contended, pass 2 flattened it" is readable from the artifact.
-    */
-  private[graft] def passTotalsJson(totals: Seq[Double]): String =
-    // Locale.ROOT: the f-interpolator uses the JVM default locale, and a
-    // comma-decimal locale would emit "106,500" — valid JSON, wrong data
-    totals.map(v => String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)))
-      .mkString("[", ",", "]")
-
-  private def timeOnce(spark: SparkSession, sfDir: String,
-                       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                       name: String): Double = {
-    val t0 = System.nanoTime()
-    try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 } catch {
-      case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
+      Timing(walls.result(), cpu, failed = false)
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        Timing(walls.result(), cpu, failed = true)
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val historyPath = java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      sys.props.getOrElse("user.dir", ".") + "/tools/bench_history.jsonl"))
-    val medians = historyMedians(historyPath, sfDir)
-    // Same-code minima ALSO feed the per-query rerun reference (VERDICT
-    // r16 ask #3): the all-history median is stale-high after a query
-    // got faster (bpe_fertility's r16 median spanned older, slower
-    // code, so a 3.13 s excursion over a 0.60-0.81 s same-code history
-    // sailed under 1.5x median) — the tightest honest reference is
-    // min(median, same-code best), and a best-of-k still above 1.5x
-    // THAT is worth the bounded extra attempts.
-    val srcFp = sourceFingerprint()
-    val sameCode = historySameCodeMins(historyPath, sfDir, srcFp)
-    def rerunRef(name: String): Option[Double] =
-      (medians.get(name).toSeq ++ sameCode.get(name).toSeq).minOption
-    val spark = GraftSession.local(cpus.toInt)
-    // Warm the session (codegen compiler, parquet footers, broadcast
-    // machinery) so the first timed query isn't charged for it.
+  /** Warm the session (codegen compiler, parquet footers, broadcast
+    * machinery) so the first timed query isn't charged for it.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
     Seq("documents", "embeddings", "orders", "lineitem", "customer")
       .foreach(t => try Tables.table(spark, sfDir, t).count() catch { case _: Throwable => () })
     // events is TIMESTAMP(NANOS) — only Tables.events sets the nanosAsLong
     // conf, so warming via Tables.table always threw and left it cold.
     try Tables.events(spark, sfDir).count() catch { case _: Throwable => () }
+  }
 
-    var reruns = 0
-    // Deterministic SORTED run order: reproducible pass-to-pass timing,
-    // and the cold artifact-build owners (bloom_index_build,
-    // dedup_artifact_build) run before the consumers that read the
-    // session caches they seed — so each shared artifact is built
-    // exactly once per pass, charged to its recorded owner (VERDICT r13
-    // "what's wrong" #2).
-    var results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      var best = timeOnce(spark, sfDir, fn, name)
-      val ref = rerunRef(name)
-      var budget = 1 + MaxExtraReruns // unconditional best-of-2, then outlier retries
-      var runs = 0
-      // a failed first run spends the SAME rerun budget — a transient
-      // failure (e.g. contention-driven OOM) gets the retry every
-      // healthy query gets unconditionally, instead of recording a
-      // permanent -1 off one bad attempt
-      while (budget > 0 && (best < 0 || runs == 0 || ref.exists(m => best > OutlierFactor * m))) {
-        reruns += 1
-        runs += 1
-        val t = timeOnce(spark, sfDir, fn, name)
-        if (t >= 0 && (best < 0 || t < best)) best = t
-        budget -= 1
-      }
-      name -> best // persistent failures stay -1 so they can't masquerade as fast queries
+  // Locale.ROOT: the f-interpolator uses the JVM default locale, and a
+  // comma-decimal locale would emit "106,500" — valid JSON, wrong data
+  private def num(v: Double): String = String.format(Locale.ROOT, "%.3f", Double.box(v))
+
+  private def obj(kvs: Seq[(String, String)]): String =
+    kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  /** (stdout summary, history line) for one suite run. Both carry the
+    * totals over the queries that did not fail: `value` sums the
+    * per-query minima, `median_total` the medians and `cpu_total` the
+    * CPU seconds per run. Stdout keeps the 20 most expensive queries
+    * (stdout consumers keep only a ~2KB tail); the history line keeps every
+    * query's minimum (-1 when it failed) and its runs.
+    */
+  private[graft] def lines(results: Seq[(String, Timing)], sfDir: String,
+                           ts: String): (String, String) = {
+    val ok = results.filterNot(_._2.failed)
+    val failed = results.collect { case (k, t) if t.failed => "\"" + k + "\"" }
+    val head =
+      s"""{"metric":"total","value":${num(ok.map(_._2.min).sum)},"unit":"sec","ts":"$ts",""" +
+        s""""median_total":${num(ok.map(_._2.median).sum)},""" +
+        s""""cpu_total":${num(ok.map(_._2.cpu / Runs).sum)},""" +
+        s""""nqueries":${results.size},"failed":${failed.size},""" +
+        s""""failed_queries":${failed.mkString("[", ",", "]")},"""
+    val worst = ok.sortBy(-_._2.min).take(20).map { case (k, t) => k -> num(t.min) }
+    val all = results.map { case (k, t) => k -> (if (t.failed) "-1" else num(t.min)) }
+    val runs = results.map { case (k, t) => k -> t.walls.map(num).mkString("[", ",", "]") }
+    (head + s""""queries":${obj(worst)},"sf":"$sfDir"}""",
+      head + s""""action":"noop","queries":${obj(all)},"runs":${obj(runs)},"sf":"$sfDir"}""")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val historyPath = java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      sys.props.getOrElse("user.dir", ".") + "/tools/bench_history.jsonl"))
+    val spark = GraftSession.local()
+    warmUp(spark, sfDir)
+    // Deterministic SORTED run order: the cold artifact-build owners
+    // (bloom_index_build, dedup_artifact_build) run before the consumers
+    // that read the session caches they seed, so each shared artifact is
+    // built by its recorded owner.
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val t = time(spark, sfDir, name, fn)
+      System.err.println(f"[bench] $name%-34s $t")
+      name -> t
     }
-    def totalOf(rs: Seq[(String, Double)]): Double =
-      rs.collect { case (_, v) if v >= 0 => v }.sum
-    // Per-pass totals for the artifact (VERDICT r14 ask #4: learning
-    // that pass 1 ran 106.5s took stderr forensics). Entry 0 is the
-    // initial best-of-k pass's total; each later entry is that extra
-    // pass's OWN single-run times summed (raw, before the cross-pass
-    // min-merge that produces run_total).
-    val passTotals = scala.collection.mutable.ArrayBuffer(totalOf(results))
-    def bestKnownOf(rs: Seq[(String, Double)]): Double = rs.collect {
-      case (k, v) if v >= 0 => medians.get(k).fold(v)(math.min(v, _))
-    }.sum
-    // Whole-suite contention escape (VERDICT r6 #1): per-query retries
-    // can't flatten a contended window that outlasts them. While this
-    // run's total blows past the denoised best-known total, run a full
-    // extra pass (bounded) and keep per-query minima across passes.
-    def contendedCanaries(rs: Seq[(String, Double)]): Seq[String] =
-      Canaries.filter(c => rs.collectFirst { case (`c`, v) => v }.exists(v =>
-        v >= 0 && medians.get(c).exists(m => v > CanaryFactor * m)))
-    val baseline = baselineTotal(historyPath, sfDir)
-    var passes = 1
-    var reason = extraPassReason(totalOf(results), bestKnownOf(results),
-      baseline, contendedCanaries(results))
-    while (passes <= MaxExtraPasses && reason.nonEmpty) {
-      passes += 1
-      System.err.println(s"[bench] ${reason.get} — running full pass $passes")
-      var passRaw = 0.0
-      results = results.map { case (name, prev) =>
-        reruns += 1
-        val t = timeOnce(spark, sfDir, SparkEntry.queries(name), name)
-        if (t >= 0) passRaw += t
-        name -> (if (t >= 0 && (prev < 0 || t < prev)) t else prev)
-      }
-      passTotals += passRaw
-      reason = extraPassReason(totalOf(results), bestKnownOf(results),
-        baseline, contendedCanaries(results))
-    }
-    // Same-code history merge (see [[historySameCodeMins]]): the
-    // RECORDED per-query number is min(this run, any earlier run of
-    // byte-identical sources at this sf). The raw run is still written
-    // to history below, un-merged. (srcFp/sameCode computed up top —
-    // they also feed the per-query rerun reference.)
-    val merged = results.map { case (k, v) =>
-      k -> (if (v >= 0) sameCode.get(k).fold(v)(math.min(v, _)) else v)
-    }
-    val nMerged = results.count { case (k, v) =>
-      v >= 0 && sameCode.get(k).exists(_ < v) }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // Worst-N per-query map for STDOUT (r20, VERDICT r19 ask #6): the
-    // driver keeps only a ~2KB stdout tail, so the full 222-entry map
-    // can never ride the short line — but the 20 most expensive queries
-    // (3dp, ~700 bytes) fit and give the driver's round-over-round
-    // comparison real per-query signal. ADDITIVE only: the short line
-    // previously carried no queries object at all; the complete map
-    // still lands in tools/bench_history.jsonl (the documented
-    // per-query artifact of record).
-    val worstQs = results.filter(_._2 >= 0).sortBy(-_._2).take(20)
-      .map { case (k, v) =>
-        "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)) }
-      .mkString("{", ",", "}")
-    val total = totalOf(merged)
-    val runTotal = totalOf(results)
-    val ts = java.time.Instant.now().toString
-    // perQuerySamples parses the queries object by the first "}" after
-    // "queries":{ — nothing may follow that object but "sf"
-    val line =
-      s"""{"metric":"total","value":$runTotal,"unit":"sec","ts":"$ts","reruns":$reruns,"passes":$passes,"src":"$srcFp",""" +
-        s""""queries":$qs,"sf":"$sfDir"}"""
-    // Contention telemetry (VERDICT r5 #7): the artifact run can land in
-    // a fully-contended window the rerun budget can't flatten (r3/r4/r5
-    // all did), so the summary also reports the sum of per-query
-    // min(this run, same-sf history median) — the closest recorded
-    // observable to the uncontended total. `value` stays the honest
-    // this-run number; best_known_total is the denoised one a gate
-    // comparing across rounds should prefer.
-    val bestKnown = bestKnownOf(results)
-    // Short form for stdout: the driver keeps only a ~2KB tail of stdout, so
-    // the full 106-entry per-query map (~4KB) can never parse there — it
-    // lives in bench_history.jsonl instead (written below). Stdout carries
-    // just the summary (<300 bytes).
-    // canaries_clean tells the round artifact's reader whether the final
-    // pass escaped the contended window (false = even the bounded extra
-    // passes couldn't flatten it — read best_known_total, not value)
-    val canariesClean = contendedCanaries(results).isEmpty
-    // The headline `value` IS the raw this-run total (VERDICT r12 "what's
-    // wrong" #2 / ADVICE r12: the gate rule "use run_total if the merged
-    // number diverges" belongs in the harness, not in prose). The
-    // history-merged denoised total is reported separately as
-    // merged_total — strictly telemetry, never the gated number.
-    // A persistently-failing query records -1 and is EXCLUDED from every
-    // total — which DEFLATES the gated number exactly when the suite is
-    // broken (review finding r14). The artifact must self-report that:
-    // `failed` + `failed_queries` make a missing-cost run distinguishable
-    // from a fast run without cross-referencing stderr.
-    val failedQueries = results.collect { case (k, v) if v < 0 => k }
-    if (failedQueries.nonEmpty)
-      System.err.println(s"[bench] ${failedQueries.size} queries FAILED every attempt " +
-        s"(their cost is MISSING from all totals): ${failedQueries.mkString(", ")}")
-    val failedJson = failedQueries.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val shortLine =
-      s"""{"metric":"total","value":$runTotal,"unit":"sec","ts":"$ts","reruns":$reruns,"passes":$passes,""" +
-        s""""pass_totals":${passTotalsJson(passTotals.toSeq)},""" +
-        s""""nqueries":${results.size},"failed":${failedQueries.size},"failed_queries":$failedJson,""" +
-        s""""run_total":$runTotal,"merged_total":$total,"merged_from_history":$nMerged,""" +
-        s""""best_known_total":$bestKnown,"canaries_clean":$canariesClean,""" +
-        s""""queries":$worstQs,"sf":"$sfDir"}"""
+    val (summary, history) = lines(results, sfDir, java.time.Instant.now().toString)
+    val failed = results.collect { case (k, t) if t.failed => k }
+    if (failed.nonEmpty)
+      System.err.println(s"[bench] ${failed.size} queries FAILED (their cost is " +
+        s"MISSING from all totals): ${failed.mkString(", ")}")
     // Full per-query record to a file too: the driver's stdout capture
-    // truncates long tails, which made round-2 timings unrecoverable.
+    // truncates long tails.
     try {
       java.nio.file.Files.write(historyPath,
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        (history + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
         java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
     } catch {
       case scala.util.control.NonFatal(e) =>
@@ -385,7 +136,7 @@ object Bench {
     spark.stop()
     // Printed after spark.stop() so the JSON is the final stdout line even if
     // shutdown emits anything — the driver parses the tail of stdout.
-    println(shortLine)
+    println(summary)
     System.out.flush()
   }
 }

@@ -68,8 +68,12 @@ object GraftSession {
       .config("spark.sql.extensions", classOf[graft.expressions.GraftExtensions].getName)
       .config(localFileSystemConf)
 
+  /** Local core count for the tools: `SPARK_GRAFT_CPUS`, else every core. */
+  def localCpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors())
+
   /** Local session for tests/tools. */
-  def local(threads: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  def local(threads: Int = localCpus): SparkSession = {
     val s = builder()
       .master(s"local[$threads]")
       .config("spark.sql.shuffle.partitions", threads.toString)

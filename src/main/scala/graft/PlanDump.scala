@@ -8,9 +8,10 @@ import java.nio.file.{Files, Paths}
   * (default: all of [[SparkEntry.queries]]) to `<outDir>/<name>.txt` —
   * the plan evidence committed under plans/r19/.
   *
-  * [[TimeQueries]] times named queries with the same `.count()` action
-  * the bench uses (best of k), printing one line per query — the fast
-  * inner loop for before/after numbers without a full 222-query pass.
+  * [[TimeQueries]] times named queries with the bench's own timer
+  * ([[Bench.time]], after [[Bench.warmUp]]), printing one line per
+  * query — the fast inner loop for before/after numbers without a full
+  * 222-query pass.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -20,8 +21,7 @@ object PlanDump {
     val names =
       if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq.sorted
     Files.createDirectories(Paths.get(outDir))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.local(cpus.toInt)
+    val spark = GraftSession.local()
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
         case None => System.err.println(s"[plandump] unknown query: $name")
@@ -42,59 +42,18 @@ object PlanDump {
   }
 }
 
-/** Subset correctness dump for fast optimization iteration: like
-  * [[Verify]] but only for the named queries. Check with
-  * `python3 tools/check.py <sfDir> <outDir>` (it iterates whatever
-  * oracle_sql.json the dump wrote, so the subset is all it compares).
-  */
-object VerifySubset {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: graft.VerifySubset <sfDir> <outDir> <query ...>")
-    val sfDir = args(0)
-    val outDir = args(1)
-    val names = args.drop(2).toSet
-    val qs = SparkEntry.queries.filter { case (k, _) => names(k) }
-    val os = SparkEntry.oracleSql.filter { case (k, _) => names(k) }
-    require(qs.nonEmpty, s"no queries matched $names")
-    val unknown = names -- SparkEntry.queries.keySet
-    if (unknown.nonEmpty) System.err.println(s"[verify_subset] unknown: $unknown")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.local(cpus.toInt)
-    val errors = Verify.dump(spark, sfDir, outDir, qs, os)
-    spark.stop()
-    if (errors.nonEmpty) {
-      System.err.println(s"[verify_subset] FAILED: ${errors.keys.mkString(", ")}")
-      sys.exit(1)
-    }
-  }
-}
-
 object TimeQueries {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: graft.TimeQueries <sfDir> <k> [query ...]")
+    require(args.length >= 1, "usage: graft.TimeQueries <sfDir> [query ...]")
     val sfDir = args(0)
-    val k = args(1).toInt
     val names =
-      if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.local(cpus.toInt)
-    // Same warmup as Bench: codegen compiler, parquet footers.
-    Seq("documents", "embeddings", "orders", "lineitem", "customer")
-      .foreach(t => try Tables.table(spark, sfDir, t).count() catch { case _: Throwable => () })
-    try Tables.events(spark, sfDir).count() catch { case _: Throwable => () }
+      if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val spark = GraftSession.local()
+    Bench.warmUp(spark, sfDir)
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
         case None => System.err.println(s"[time] unknown query: $name")
-        case Some(fn) =>
-          val times = (1 to k).map { _ =>
-            val t0 = System.nanoTime()
-            try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-            catch { case e: Throwable =>
-              System.err.println(s"[time] $name failed: ${e.getMessage}"); -1.0 }
-          }
-          val ok = times.filter(_ >= 0)
-          val best = if (ok.nonEmpty) ok.min else -1.0
-          println(f"[time] $name%-34s best=$best%8.3f  runs=${ok.map(t => f"$t%.3f").mkString(",")}")
+        case Some(fn) => println(f"[time] $name%-34s ${Bench.time(spark, sfDir, name, fn)}")
       }
     }
     spark.stop()

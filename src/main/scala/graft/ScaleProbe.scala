@@ -24,12 +24,12 @@ import org.apache.spark.sql.functions._
   * vectors. Replica 0 is the original corpus byte-for-byte, so
   * id-pinned fixtures (centroid slices, query ids < 10) keep working.
   *
-  * Runs each query best-of-2 at ×1 and ×N in ONE warm session (the
-  * session-cached artifacts make this the warm-path ratio — the honest
-  * comparison, since both scales get the same treatment) and prints
-  * one JSON line: {"metric":"scale_probe","factor":N,"queries":
-  * {name:{"x1":s,"xN":s,"ratio":r}},...}. Results are banked in
-  * PLANS.md.
+  * Times each query with [[Bench.time]] at ×1 and ×N in ONE warm
+  * session (the session-cached artifacts make this the warm-path ratio
+  * — the honest comparison, since both scales get the same treatment)
+  * and prints one JSON line: {"metric":"scale_probe","factor":N,
+  * "queries":{name:{"x1":s,"xN":s,"ratio":r}},...}. Results are banked
+  * in PLANS.md.
   */
 object ScaleProbe {
 
@@ -102,26 +102,16 @@ object ScaleProbe {
     fs.create(done, true).close()
   }
 
-  private def timeOnce(spark: SparkSession, dir: String,
-                       fn: (SparkSession, String) => DataFrame, name: String): Double = {
-    val t0 = System.nanoTime()
-    try { fn(spark, dir).count(); (System.nanoTime() - t0) / 1e9 } catch {
-      case e: Throwable =>
-        System.err.println(s"[scaleprobe] $name failed on $dir: ${e.getMessage}"); -1.0
-    }
-  }
-
-  /** (cold, warm): first run — which pays any per-corpus artifact
-    * build — and the min of two runs. Both matter: the warm ratio is
-    * the steady-state read path, the cold ratio charges index/model
-    * construction to the scale that builds it.
+  /** (cold, warm) seconds from [[Bench.time]]: run 1 — which pays any
+    * per-corpus artifact build — and the minimum. Both matter: the warm
+    * ratio is the steady-state read path, the cold ratio charges
+    * index/model construction to the scale that builds it. -1 when the
+    * query failed.
     */
   private def coldWarm(spark: SparkSession, dir: String,
                        fn: (SparkSession, String) => DataFrame, name: String): (Double, Double) = {
-    val a = timeOnce(spark, dir, fn, name)
-    val b = timeOnce(spark, dir, fn, name)
-    val warm = if (a < 0) b else if (b < 0) a else math.min(a, b)
-    (a, warm)
+    val t = Bench.time(spark, dir, name, fn)
+    if (t.failed) (-1.0, -1.0) else (t.walls.head, t.min)
   }
 
   def main(args: Array[String]): Unit = {
@@ -133,7 +123,7 @@ object ScaleProbe {
     val names = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(DefaultQueries)
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.local()
     buildCorpus(spark, sfDir, out, factor)
     // warm both scan paths so neither scale is charged session startup
     Seq(sfDir, out).foreach { d =>

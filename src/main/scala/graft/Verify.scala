@@ -47,13 +47,20 @@ object Verify {
     mapper.writeValueAsString(node)
   }
 
+  /** `graft.Verify <sfDir> <outDir> [query ...]`: dumps every query, or
+    * only the named ones (an unknown name fails the run).
+    */
   def main(args: Array[String]): Unit = {
-    require(args.length == 2,
-      s"usage: graft.Verify <sfDir> <outDir> — got ${args.length} args: ${args.mkString(" ")}")
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus.toInt)
-    val errors = dump(spark, sfDir, outDir, SparkEntry.queries, SparkEntry.oracleSql)
+    require(args.length >= 2,
+      s"usage: graft.Verify <sfDir> <outDir> [query ...] — got ${args.length} args: ${args.mkString(" ")}")
+    val Array(sfDir, outDir) = args.take(2)
+    val names = args.drop(2).toSet
+    val unknown = names -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    def named[V](m: Map[String, V]): Map[String, V] =
+      if (names.isEmpty) m else m.filter { case (k, _) => names(k) }
+    val spark = GraftSession.local()
+    val errors = dump(spark, sfDir, outDir, named(SparkEntry.queries), named(SparkEntry.oracleSql))
     spark.stop()
     if (errors.nonEmpty) {
       System.err.println(s"[verify] ${errors.size} quer${if (errors.size == 1) "y" else "ies"} FAILED: ${errors.keys.mkString(", ")}")

@@ -800,8 +800,8 @@ object PipelineQueries {
     * processed files, so a repeat call's stream start is a guaranteed
     * no-op — but the engine still pays a full MicroBatchExecution
     * spin-up (checkpoint read, input listing, no-data batch planning,
-    * ~0.3–0.8 s) per call, and the bench calls every gate at least
-    * twice (best-of-2) plus once per extra pass. Skipping the provably
+    * ~0.3–0.8 s) per call, and the bench calls every gate
+    * [[graft.Bench.Runs]] times in a row. Skipping the provably
     * idle re-run changes NOTHING the gates read: the stores/outputs are
     * re-read from disk on every call, and the drop-metrics flush only
     * ever writes on the run that processed data (see

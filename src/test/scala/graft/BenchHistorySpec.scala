@@ -1,92 +1,72 @@
 package graft
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
-/** The bench harness's history-file readers — load-bearing since r14:
-  * [[Bench.baselineTotal]] feeds the gate-aware extra-pass trigger (a
-  * mis-parsed baseline silently disables the 2× protection, or worse,
-  * triggers passes on every run), and the medians/same-code-mins
-  * parsers drive the outlier-rerun and artifact-merge machinery. Pins:
-  * first-line selection, sf filtering with the pre-"sf"-field default,
-  * same-code fingerprint filtering, and the -1 (failed query) skip.
+/** The bench's record of a suite run: the k-run summary of one query
+  * and the stdout / history lines [[Bench.lines]] builds from them.
+  * Pins the stdout contract the driver parses, the `queries` map
+  * tools/bench_compare.py reads, and that a failed query is listed but
+  * never counted.
   */
 class BenchHistorySpec extends AnyFunSuite {
-  private def histFile(lines: String*): java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempFile("bench-hist", ".jsonl")
-    java.nio.file.Files.write(p,
-      lines.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    p
+  private val sf = "/data/sf0.1"
+  private def parse(line: String): JsonNode = new ObjectMapper().readTree(line)
+  private def keys(n: JsonNode): Set[String] = n.fieldNames().asScala.toSet
+
+  test("Timing summarizes its runs: min, median and spread") {
+    val t = Bench.Timing(Seq(0.5, 0.2, 0.3), cpu = 2.4, failed = false)
+    assert(t.min == 0.2)
+    assert(t.median == 0.3)
+    assert(math.abs(t.spread - 0.3) < 1e-12)
+    // an even number of runs (a failed query's partial record) takes the mean of the middle two
+    assert(Bench.Timing(Seq(4.0, 1.0), cpu = 0, failed = true).median == 2.5)
   }
 
-  private val sf01 = "/root/testdata/sf0.1"
-  private val sf001 = "/root/testdata/sf0.01"
-
-  test("baselineTotal: FIRST same-sf line wins; missing sf field means sf0.1") {
-    val p = histFile(
-      """{"metric":"total","value":51.99,"unit":"sec","queries":{"q1":1.0}}""",
-      s"""{"metric":"total","value":80.0,"unit":"sec","queries":{"q1":2.0},"sf":"$sf01"}""",
-      s"""{"metric":"total","value":9.5,"unit":"sec","queries":{"q1":0.5},"sf":"$sf001"}""")
-    // line 1 has no "sf" field -> treated as sf0.1 (the r1/r2 format)
-    assert(Bench.baselineTotal(p, sf01) == 51.99)
-    // a different sf finds ITS first line, not the global first
-    assert(Bench.baselineTotal(p, sf001) == 9.5)
-    // no matching line / missing file -> -1 disables the gate trigger
-    assert(Bench.baselineTotal(p, "/root/testdata/sf9") == -1.0)
-    assert(Bench.baselineTotal(
-      java.nio.file.Paths.get("/tmp/bench-hist-nope.jsonl"), sf01) == -1.0)
+  test("a query that fails in one run is listed and left out of every total") {
+    val results = Seq(
+      "a" -> Bench.Timing(Seq(1.0, 2.0, 3.0), cpu = 6.0, failed = false),
+      "b" -> Bench.Timing(Seq(0.5, 0.7, 0.6), cpu = 3.0, failed = false),
+      "c" -> Bench.Timing(Seq(10.0), cpu = 9.0, failed = true))
+    val (summary, history) = Bench.lines(results, sf, "2026-01-01T00:00:00Z")
+    val out = parse(summary)
+    val hist = parse(history)
+    for (n <- Seq(out, hist)) {
+      assert(n.get("metric").asText == "total" && n.get("unit").asText == "sec")
+      assert(n.get("value").asDouble == 1.5) // minima 1.0 + 0.5
+      assert(n.get("median_total").asDouble == 2.6) // medians 2.0 + 0.6
+      assert(n.get("cpu_total").asDouble == 3.0) // (6.0 + 3.0) / Runs
+      assert(n.get("nqueries").asInt == 3 && n.get("failed").asInt == 1)
+      assert(n.get("failed_queries").elements().asScala.map(_.asText).toSeq == Seq("c"))
+      assert(n.get("sf").asText == sf)
+    }
+    assert(keys(out) == Set("metric", "value", "unit", "ts", "median_total", "cpu_total",
+      "nqueries", "failed", "failed_queries", "queries", "sf"))
+    assert(keys(out.get("queries")) == Set("a", "b"))
+    // history: every query's minimum (-1 when failed), its runs, and the action
+    assert(hist.get("action").asText == "noop")
+    assert(hist.get("queries").get("c").asDouble == -1.0)
+    assert(hist.get("queries").get("b").asDouble == 0.5)
+    assert(hist.get("runs").get("a").elements().asScala.map(_.asDouble).toSeq == Seq(1.0, 2.0, 3.0))
   }
 
-  test("historyMedians: per-query median over same-sf lines, -1 runs skipped") {
-    val p = histFile(
-      s"""{"value":1,"queries":{"q1":1.0,"q2":-1},"sf":"$sf01"}""",
-      s"""{"value":1,"queries":{"q1":3.0,"q2":0.4},"sf":"$sf01"}""",
-      s"""{"value":1,"queries":{"q1":2.0},"sf":"$sf01"}""",
-      s"""{"value":1,"queries":{"q1":99.0},"sf":"$sf001"}""") // other sf: excluded
-    val m = Bench.historyMedians(p, sf01)
-    assert(m("q1") == 2.0) // median of 1,3,2
-    assert(m("q2") == 0.4) // the -1 failed run is not a sample
+  test("stdout keeps the 20 most expensive queries, history keeps all") {
+    val results = (1 to 25).map(i => f"q$i%02d" -> Bench.Timing(Seq(i.toDouble), 0, failed = false))
+    val (summary, history) = Bench.lines(results, sf, "ts")
+    assert(keys(parse(summary).get("queries")) == (6 to 25).map(i => f"q$i%02d").toSet)
+    assert(keys(parse(history).get("queries")).size == 25)
   }
 
-  test("passTotalsJson: fixed 3-decimal array, one entry per pass (r15 artifact field)") {
-    assert(Bench.passTotalsJson(Seq(106.5004, 92.1)) == "[106.500,92.100]")
-    assert(Bench.passTotalsJson(Seq(51.99)) == "[51.990]")
-  }
-
-  test("extraPassReason: the r16 noise shape triggers the margin pass; " +
-    "genuine slowness never earns passes") {
-    // clean run — no extra pass
-    assert(Bench.extraPassReason(50.0, 49.0, 51.99, Nil).isEmpty)
-    // blown total vs best_known (the classic r6 trigger)
-    assert(Bench.extraPassReason(80.0, 60.0, -1.0, Nil).nonEmpty)
-    // inflated canaries
-    assert(Bench.extraPassReason(50.0, 49.0, 51.99, Seq("p15_truncate")).nonEmpty)
-    // THE r16 artifact shape (VERDICT r16 ask #3): 89.35 s recorded vs
-    // ~79 s denoised on a 51.99 s baseline — 1.72x raw, under the 1.2x
-    // best_known trigger (94.8) and the 2x gate (103.98), so a noisy
-    // window became the number of record; the 1.7x margin now fires
-    assert(Bench.extraPassReason(89.35, 79.0, 51.99, Nil).nonEmpty)
-    // the r13 shape (2x gate breached, denoised under) still fires
-    assert(Bench.extraPassReason(112.66, 94.1, 51.99, Nil).nonEmpty)
-    // genuinely slow code — best_known ALSO over every line: reruns
-    // cannot fix real cost, no passes are spent
-    assert(Bench.extraPassReason(120.0, 115.0, 51.99, Nil).isEmpty)
-    // no best_known (all queries failed / first ever run): no trigger
-    assert(Bench.extraPassReason(80.0, -1.0, 51.99, Nil).isEmpty)
-    // no baseline recorded: margin/gate triggers disabled, best_known
-    // trigger still live
-    assert(Bench.extraPassReason(89.35, 79.0, -1.0, Nil).isEmpty)
-  }
-
-  test("historySameCodeMins: only byte-identical-source same-sf runs merge") {
-    val p = histFile(
-      s"""{"value":1,"src":"aaaa","queries":{"q1":1.5,"q2":0.2},"sf":"$sf01"}""",
-      s"""{"value":1,"src":"aaaa","queries":{"q1":0.9,"q2":-1},"sf":"$sf01"}""",
-      s"""{"value":1,"src":"bbbb","queries":{"q1":0.1},"sf":"$sf01"}""", // other code
-      s"""{"value":1,"src":"aaaa","queries":{"q1":0.2},"sf":"$sf001"}""") // other sf
-    val m = Bench.historySameCodeMins(p, sf01, "aaaa")
-    assert(m("q1") == 0.9) // min over the two aaaa@sf0.1 lines only
-    assert(m("q2") == 0.2) // -1 skipped
-    // unknown fingerprint -> empty (no cross-code merging, ever)
-    assert(Bench.historySameCodeMins(p, sf01, "none").isEmpty)
+  test("numbers use Locale.ROOT whatever the default locale") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      val (summary, history) = Bench.lines(
+        Seq("a" -> Bench.Timing(Seq(106.5004, 107.0), 1.25, failed = false)), sf, "ts")
+      assert(summary.contains("\"value\":106.500,"))
+      assert(history.contains("\"runs\":{\"a\":[106.500,107.000]}"))
+      assert(parse(summary).get("queries").get("a").asDouble == 106.5)
+    } finally java.util.Locale.setDefault(saved)
   }
 }

@@ -8,9 +8,12 @@ so a round's perf work can be judged against the previous record
 instead of a single noisy sample.
 
 --gate: additionally check run B's queries against the per-query MEDIAN
-of all same-sf history runs (excluding B itself) and exit non-zero when
-any query exceeds GATE_FACTOR x its median — catches both genuine plan
-regressions and contention-corrupted recordings at record time.
+of all history runs with B's sf and timed action (excluding B itself)
+and exit non-zero when any query exceeds GATE_FACTOR x its median —
+catches both genuine plan regressions and contention-corrupted
+recordings at record time. A noop write computes every projected
+kernel that a count() prunes, so runs of the two actions never gate
+each other.
 """
 import json
 import os
@@ -20,16 +23,23 @@ import sys
 HISTORY = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_history.jsonl")
 GATE_FACTOR = 2.0
 
+def action(run):
+    """The action a run timed; rows written before the field existed all
+    timed count()."""
+    return run.get("action", "count")
+
 def gate(runs, ib):
     b = runs[ib]
     ib_abs = ib if ib >= 0 else len(runs) + ib
     # default the sf field SYMMETRICALLY: rows written before the "sf"
     # field existed were all sf0.1 runs, on both sides of the comparison
     default_sf = "/root/testdata/sf0.1"
+    def setting(r):
+        return r.get("sf", default_sf), action(r)
     peers = [r for i, r in enumerate(runs)
-             if i != ib_abs and r.get("sf", default_sf) == b.get("sf", default_sf)]
+             if i != ib_abs and setting(r) == setting(b)]
     if not peers:
-        print("[gate] no same-sf history to gate against — pass")
+        print("[gate] no same-sf, same-action history to gate against — pass")
         return 0
     offenders = []
     for k, vb in b["queries"].items():
@@ -47,7 +57,7 @@ def gate(runs, ib):
                   else f"  {k:34} FAILED (-1)")
         return 1
     print(f"[gate] pass — no query over {GATE_FACTOR}x its history median "
-          f"({len(peers)} same-sf runs)")
+          f"({len(peers)} same-sf, same-action runs)")
     return 0
 
 def main():
@@ -62,8 +72,9 @@ def main():
     ia, ib = (int(args[0]), int(args[1])) if len(args) == 2 else (-2, -1)
     a, b = runs[ia], runs[ib]
     qa, qb = a["queries"], b["queries"]
-    print(f"A: ts={a.get('ts','?')} total={a['value']:.1f}s ({len(qa)} queries)")
-    print(f"B: ts={b.get('ts','?')} total={b['value']:.1f}s ({len(qb)} queries)")
+    for tag, r, q in (("A", a, qa), ("B", b, qb)):
+        print(f"{tag}: ts={r.get('ts','?')} action={action(r)} "
+              f"total={r['value']:.1f}s ({len(q)} queries)")
     rows = []
     for k in sorted(set(qa) | set(qb)):
         va, vb = qa.get(k), qb.get(k)
