@@ -2,7 +2,9 @@ package graft
 
 import java.lang.management.ManagementFactory
 import java.util.Locale
+import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark runner over every query in [[SparkEntry.queries]].
   *
@@ -11,7 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * lets Catalyst prune projected kernels) and nothing is persisted.
   * Wall time of each run sits next to the process CPU time, so ambient
   * contention shows in the run's own data instead of being guessed from
-  * earlier runs.
+  * earlier runs, and next to the run's codegen compiles, so a query
+  * that loses its generated-class reuse shows as compiles in runs 2 and 3.
   *
   * Prints exactly ONE JSON line on stdout (the last line) — `value` is
   * the sum of per-query minima, failed queries are listed and left out
@@ -24,8 +27,11 @@ object Bench {
 
   /** One query's timing: the wall seconds of each completed run and the
     * process CPU seconds over all of them. `failed` when any run threw.
+    * `compiles` and `compileMs` are each completed run's codegen class
+    * compiles and the milliseconds spent compiling them.
     */
-  final case class Timing(walls: Seq[Double], cpu: Double, failed: Boolean) {
+  final case class Timing(walls: Seq[Double], cpu: Double, failed: Boolean,
+                          compiles: Seq[Long] = Nil, compileMs: Seq[Double] = Nil) {
     def min: Double = walls.min
     def median: Double = {
       val s = walls.sorted
@@ -35,29 +41,43 @@ object Bench {
     override def toString: String =
       if (failed) "FAILED"
       else f"min=$min%.3f median=$median%.3f spread=$spread%.3f cpu=$cpu%.3f " +
-        s"runs=${walls.map(w => f"$w%.3f").mkString(",")}"
+        s"runs=${walls.map(w => f"$w%.3f").mkString(",")} compiles=${compiles.mkString(",")} " +
+        s"compile_ms=${compileMs.map(m => f"$m%.0f").mkString(",")}"
   }
 
   private val os = ManagementFactory.getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
-  /** The one query timer: [[Runs]] noop writes of `fn(spark, sfDir)`. */
+  /** The one query timer: [[Runs]] noop writes of `fn(spark, sfDir)`.
+    * Compiles are the JVM-wide count of Spark's compile-time histogram,
+    * and compile ms its exact nanosecond sum (`CodeGenerator.compileTime`;
+    * the histogram only samples its values); both are read as deltas over
+    * each run.
+    */
   def time(spark: SparkSession, sfDir: String, name: String,
            fn: (SparkSession, String) => DataFrame): Timing = {
     val walls = Seq.newBuilder[Double]
+    val compiles = Seq.newBuilder[Long]
+    val compileMs = Seq.newBuilder[Double]
     val cpu0 = os.getProcessCpuTime
     def cpu = (os.getProcessCpuTime - cpu0) / 1e9
+    def timing(failed: Boolean) =
+      Timing(walls.result(), cpu, failed, compiles.result(), compileMs.result())
     try {
       (1 to Runs).foreach { _ =>
+        val c0 = METRIC_COMPILATION_TIME.getCount
+        val ns0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         walls += (System.nanoTime() - t0) / 1e9
+        compiles += METRIC_COMPILATION_TIME.getCount - c0
+        compileMs += (CodeGenerator.compileTime - ns0) / 1e6
       }
-      Timing(walls.result(), cpu, failed = false)
+      timing(failed = false)
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        Timing(walls.result(), cpu, failed = true)
+        timing(failed = true)
     }
   }
 
@@ -84,7 +104,8 @@ object Bench {
     * per-query minima, `median_total` the medians and `cpu_total` the
     * CPU seconds per run. Stdout keeps the 20 most expensive queries
     * (stdout consumers keep only a ~2KB tail); the history line keeps every
-    * query's minimum (-1 when it failed) and its runs.
+    * query's minimum (-1 when it failed), its runs, and each run's
+    * compiles and compile ms.
     */
   private[graft] def lines(results: Seq[(String, Timing)], sfDir: String,
                            ts: String): (String, String) = {
@@ -98,9 +119,12 @@ object Bench {
         s""""failed_queries":${failed.mkString("[", ",", "]")},"""
     val worst = ok.sortBy(-_._2.min).take(20).map { case (k, t) => k -> num(t.min) }
     val all = results.map { case (k, t) => k -> (if (t.failed) "-1" else num(t.min)) }
-    val runs = results.map { case (k, t) => k -> t.walls.map(num).mkString("[", ",", "]") }
+    def perRun(f: Timing => Seq[String]) =
+      obj(results.map { case (k, t) => k -> f(t).mkString("[", ",", "]") })
     (head + s""""queries":${obj(worst)},"sf":"$sfDir"}""",
-      head + s""""action":"noop","queries":${obj(all)},"runs":${obj(runs)},"sf":"$sfDir"}""")
+      head + s""""action":"noop","queries":${obj(all)},"runs":${perRun(_.walls.map(num))},""" +
+        s""""compiles":${perRun(_.compiles.map(_.toString))},""" +
+        s""""compile_ms":${perRun(_.compileMs.map(num))},"sf":"$sfDir"}""")
   }
 
   def main(args: Array[String]): Unit = {

@@ -17,6 +17,8 @@ import org.apache.spark.sql.SparkSession
   *    session without per-call registration
   *  - [[localFileSystemConf]] routes the `file` scheme to the fork-free
   *    local filesystem (HDFS/S3 schemes are untouched)
+  *  - [[codegenCacheConf]] sizes Spark's generated-class cache to the
+  *    engine's working set, so a JVM compiles each class once
   *
   * INTENDED CLUSTER DEFAULTS (VERDICT r15 ask #8 — recorded here so the
   * r15 unpin survives refactors; GraftSessionSpec asserts [[builder]]
@@ -51,6 +53,30 @@ object GraftSession {
     "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
 
+  /** Spark's generated-class cache (`spark.sql.codegen.cache.maxEntries`)
+    * at 1000 entries, about 4× the engine's largest working set.
+    *
+    * Every whole-stage-codegen and projection class Spark generates is
+    * Janino-compiled and kept in one LRU cache per JVM. Spark's default
+    * holds 100 classes. The 8 curation jobs of the repo benchmark alone
+    * generate 257 distinct classes, so at the default each pass evicts
+    * what the next one needs. The benchmark's loop (the jobs twice on
+    * sf0.01, then once on a fresh sf0.1 corpus, 4 cores) made 764–768
+    * compiles, 252–254 in the timed pass; at 1000 it makes 257, none
+    * in the timed pass, and that pass runs 10.6–11.7 s instead of
+    * 15.0–16.1 s, with Metaspace at exit 167 MB against 170 MB. Any
+    * driver or executor JVM that runs more than 100 distinct stages — a
+    * long-lived executor serving scheduled curation jobs, say — thrashes
+    * the same way, so this is a default of every deployment.
+    *
+    * The cache is JVM-wide and sized ONCE, from the conf that is active
+    * when the JVM first generates code (the key is a static SQL conf,
+    * fixed per context). A later session or a per-job option cannot
+    * resize it, which is why the value is set here, where every session
+    * of the engine is built, and not on a job.
+    */
+  val codegenCacheConf: Map[String, String] = Map("spark.sql.codegen.cache.maxEntries" -> "1000")
+
   /** Cluster-agnostic builder: deliberately does NOT set
     * `spark.sql.shuffle.partitions` (review finding r15: sizing it to
     * the DRIVER's core count pinned every exchange on a 400-core
@@ -67,6 +93,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", classOf[graft.expressions.GraftExtensions].getName)
       .config(localFileSystemConf)
+      .config(codegenCacheConf)
 
   /** Local core count for the tools: `SPARK_GRAFT_CPUS`, else every core. */
   def localCpus: Int =

@@ -40,6 +40,12 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(opts.get("spark.hadoop.fs.file.impl").contains(classOf[ForkFreeLocalFileSystem].getName))
     assert(opts.get("spark.hadoop.fs.AbstractFileSystem.file.impl")
       .contains(classOf[ForkFreeLocalFs].getName))
+    assert(opts.get("spark.sql.codegen.cache.maxEntries").contains("1000"))
+  }
+
+  test("the test session is built with the engine's codegen cache size") {
+    val conf = graft.pipeline.SparkTestSession.spark.sparkContext.getConf
+    GraftSession.codegenCacheConf.foreach { case (k, v) => assert(conf.getOption(k).contains(v), k) }
   }
 
 }

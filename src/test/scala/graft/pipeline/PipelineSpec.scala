@@ -23,6 +23,9 @@ object SparkTestSession {
     // the engine's own `file` filesystem, so the crash/replay specs run
     // on what GraftSession.builder ships
     .config(graft.GraftSession.localFileSystemConf)
+    // the engine's codegen class cache size, so the specs compile (and
+    // reuse) generated classes as a shipped session does
+    .config(graft.GraftSession.codegenCacheConf)
     .appName("graft-test")
     .getOrCreate()
 }
