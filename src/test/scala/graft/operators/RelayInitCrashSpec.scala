@@ -5,9 +5,10 @@ import graft.pipeline.SparkTestSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** ensureIdxRelay's crash-mid-init window (VERDICT r19 ask #5): the
-  * `_INIT_DONE` marker covers TEN store inits, so a crash between any
-  * two of them re-runs ALL of them on the next call. That is only
+/** ensureIdxRelay's crash-mid-init window (VERDICT r19 ask #5): its
+  * `_INIT_DONE` step (`RelayFixtures.once`, which writes the marker only
+  * after the step returns) covers TEN store inits, so a crash between
+  * any two of them re-runs ALL of them on the next call. That is only
   * correct because every store init is a FULL overwrite — this spec
   * pins the property by dirtying a PREFIX of the stores with data from
   * a partial earlier attempt (worse than any real crash leaves behind:
