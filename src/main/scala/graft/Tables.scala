@@ -63,6 +63,10 @@ object Tables {
     * Moved here from DedupQueries (r19 optimization round): the same
     * single-split scan starves the image/audio/pdf codec kernels and the
     * tokenize+hash passes in Multimodal/Source/Curation/Text queries.
+    * [[graft.streaming.EventStreams.ingestRelay]] widens each micro-batch
+    * before its points lineage: a file-stream micro-batch is a scan of
+    * the files that landed since the last trigger, so it meets the
+    * precondition below.
     *
     * PRECONDITION: pass a plain SCAN (projection/filter at most).
     * `rdd.getNumPartitions` is job-free only for exchange-free plans —

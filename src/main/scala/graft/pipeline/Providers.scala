@@ -192,10 +192,38 @@ trait ContextProvider extends Serializable {
   def contextFor(documentHead: String, chunkText: String): String
 }
 
+/** `[ctx] ` and the head's first 8 tokens joined by one space: by
+  * definition `head.trim.split("\\s+").take(8).mkString(" ")` (ProvidersSpec
+  * pins the two equal). The head is up to 32,000 characters and this
+  * runs once per chunk, so it reads only as far as the 8th token.
+  */
 final class HeadlineContextProvider extends ContextProvider {
   def contextFor(documentHead: String, chunkText: String): String = {
-    val head = Option(documentHead).getOrElse("").trim.split("\\s+").take(8).mkString(" ")
+    val head = firstTokens(documentHead, 8)
     if (head.isEmpty) "" else s"[ctx] $head"
+  }
+
+  /** Tokens split on regex `\s` ([ \t\n\x0B\f\r]); the ends cut as
+    * `String.trim` cuts them (every char <= U+0020, control chars too).
+    */
+  private def firstTokens(s: String, n: Int): String = {
+    def isSep(c: Char) = c == ' ' || (c >= '\t' && c <= '\r')
+    if (s == null) return ""
+    var end = s.length
+    while (end > 0 && s.charAt(end - 1) <= ' ') end -= 1
+    var i = 0
+    while (i < end && s.charAt(i) <= ' ') i += 1
+    val out = new java.lang.StringBuilder
+    var k = 0
+    while (i < end && k < n) {
+      val start = i
+      while (i < end && !isSep(s.charAt(i))) i += 1
+      if (k > 0) out.append(' ')
+      out.append(s, start, i)
+      k += 1
+      while (i < end && isSep(s.charAt(i))) i += 1
+    }
+    out.toString
   }
 }
 

@@ -88,6 +88,17 @@ object TextExtraction {
     * negligible at 100 TB file counts (a 32-bit hash hits ~50% collision
     * odds near 77k files and silently merges distinct documents —
     * round-2 judge finding).
+    *
+    * OUTPUT PARTITIONING: AQE-sized, not one partition per scan split.
+    * The codecs run on the scan's splits; a `rebalance` hint then lets
+    * adaptive execution coalesce the decoded text into partitions near
+    * the advisory size. Every parquet write task pays a fixed cost (it
+    * deserializes the job's ~1,100-entry Hadoop configuration twice,
+    * tens of milliseconds of CPU), and a write commits its files one
+    * rename at a time, so an append that kept the scan's splits paid
+    * that cost once per split and left a file stream reading a
+    * half-committed directory. Rebalanced, a small append is one write
+    * task and one file; a large one writes files near the advisory size.
     */
   def extract(files: DataFrame, pathCol: Column = col("path")): DataFrame =
     files
@@ -97,4 +108,5 @@ object TextExtraction {
         xxhash64(col("source")).as("doc_id"),
         col("source"), col("text"),
         length(col("text")).cast("long").as("n_chars"))
+      .hint("rebalance")
 }

@@ -597,6 +597,13 @@ object EventStreams {
     * ([[IngestPipeline.ledgerStages]]) the same way, so a restarted
     * relay heals a torn points-written/ledger-missing state.
     *
+    * The points lineage reads the micro-batch through [[graft.Tables.widen]]:
+    * a batch of one or a few small files (one extract append each) is
+    * spread round-robin over every core, so chunk, enrich and embed run
+    * on balanced tasks; a batch already that wide gets no exchange. The
+    * ledger's native projection reads the raw batch, one write task per
+    * input split.
+    *
     * `betweenSinks` is a failure-injection seam for restart specs,
     * deliberately placed at the worst crash point — after the points
     * sink committed but before the ledger sink — where a crash leaves
@@ -624,7 +631,7 @@ object EventStreams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         writeBatchPartition(
-          IngestPipeline.run(batch, settings, provider, fixedChunker = fixedChunker),
+          IngestPipeline.run(graft.Tables.widen(batch), settings, provider, fixedChunker = fixedChunker),
           batchId, outputDir)
         betweenSinks(batchId)
         ledgerDir.foreach { ld =>

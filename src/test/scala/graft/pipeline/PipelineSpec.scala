@@ -56,6 +56,36 @@ class ProvidersSpec extends AnyFunSuite {
     assert(c.contextFor("   ", "x") == "")
   }
 
+  test("HeadlineContextProvider equals its split-the-whole-head definition (scalacheck)") {
+    import org.scalacheck.{Gen, Prop, Test}
+    def naive(head: String): String = {
+      val h = Option(head).getOrElse("").trim.split("\\s+").take(8).mkString(" ")
+      if (h.isEmpty) "" else s"[ctx] $h"
+    }
+    // what regex \s matches; controls below U+0020 that trim strips and
+    // \s does not; characters neither touches (U+00A0, U+2003)
+    val sep = Gen.oneOf(' ', '\t', '\n', '\u000b', '\f', '\r')
+    val ctrl = Gen.oneOf('\u0000', '\u0001', '\u0008', '\u000e', '\u001c', '\u001f')
+    val other = Gen.oneOf('\u00a0', '\u2003', '\u00e9')
+    val ch = Gen.frequency(6 -> Gen.alphaNumChar, 3 -> sep, 1 -> ctrl, 1 -> other)
+    val head = Gen.frequency(
+      1 -> Gen.const(null: String),
+      1 -> Gen.const(""),
+      2 -> Gen.listOf(Gen.oneOf(sep, ctrl)).map(_.mkString),
+      10 -> Gen.listOf(ch).map(_.mkString),
+      2 -> Gen.listOfN(400, ch).map(_.mkString))
+    val c = new HeadlineContextProvider
+    def codePoints(h: String) = Option(h).map(_.map(_.toInt).mkString(",")).toString
+    val result = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(3000).withInitialSeed(0x5EEDC7L),
+      Prop.forAll(head)(h => Prop.propBoolean(c.contextFor(h, "x") == naive(h)) :| codePoints(h)))
+    assert(result.passed, result.status.toString)
+    Seq(null, "", " \t\n", "\u0001", "\u0001a b\u001f", "a \u0001 b", "\u00a0", "\u00a0 a\u00a0b",
+      " a\t\n\u000b\f\r b  c ", (1 to 12).mkString(" \t ")).foreach { h =>
+      assert(c.contextFor(h, "x") == naive(h), s"head ${codePoints(h)}")
+    }
+  }
+
   test("LexicalOverlapReranker scores word-set Jaccard") {
     val r = new LexicalOverlapReranker
     assert(r.score("a b", "a b") == 1.0)
