@@ -3,7 +3,6 @@ package graft.streaming
 import graft.pipeline.{IngestPipeline, SparkTestSession}
 import graft.sources.TextExtraction
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.types._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
@@ -73,14 +72,11 @@ class IngestWriteShapeSpec extends AnyFunSuite {
       (i, s"src$i", text, text.length.toLong)
     }.toDF("doc_id", "source", "text", "n_chars").coalesce(1).write.parquet(in)
     assert(dataFiles(in).size == 1)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("source", StringType),
-      StructField("text", StringType), StructField("n_chars", LongType)))
 
     val writes = new WriteStages
     s.sparkContext.addSparkListener(writes)
     try {
-      val q = EventStreams.ingestRelay(s, in, s"$root/points", s"$root/cp", schema = Some(schema))
+      val q = EventStreams.ingestRelay(s, in, s"$root/points", s"$root/cp")
       try q.processAllAvailable() finally q.stop()
       eventually(timeout(Span(30, Seconds))) { assert(writes.tasks.nonEmpty) }
     } finally s.sparkContext.removeSparkListener(writes)
@@ -89,7 +85,7 @@ class IngestWriteShapeSpec extends AnyFunSuite {
 
     def idsAndTexts(df: org.apache.spark.sql.DataFrame) =
       df.select("point_id", "text").collect().map(r => r.getString(0) -> r.getString(1)).toSet
-    val expected = idsAndTexts(IngestPipeline.run(s.read.schema(schema).parquet(in)))
+    val expected = idsAndTexts(IngestPipeline.run(s.read.parquet(in)))
     assert(expected.size >= 40)
     assert(idsAndTexts(s.read.parquet(s"$root/points")) == expected)
   }
