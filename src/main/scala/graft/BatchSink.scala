@@ -52,7 +52,7 @@ object BatchSink {
     w.parquet(path)
   }
 
-  private def fsOf(spark: SparkSession, path: String) = {
+  private[graft] def fsOf(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
@@ -104,6 +104,14 @@ object BatchSink {
       if (fs.exists(old)) fs.delete(old, true)
       if (fs.exists(swap)) fs.delete(swap, true)
     }
+  }
+
+  /** Read a [[writeBatch]]-maintained table after [[recoverSwap]] has
+    * healed any torn compact swap of it.
+    */
+  def readHealed(spark: SparkSession, path: String): DataFrame = {
+    recoverSwap(spark, path)
+    spark.read.parquet(path)
   }
 
   /** Crash-safe FULL-table replacement — write-then-swap, the primitive

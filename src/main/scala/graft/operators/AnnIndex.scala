@@ -263,8 +263,7 @@ object AnnIndex {
     */
   private def readHealed(spark: SparkSession, dir: String, table: String): DataFrame = {
     recoverRetrain(spark, dir)
-    graft.BatchSink.recoverSwap(spark, s"$dir/$table")
-    spark.read.parquet(s"$dir/$table")
+    graft.BatchSink.readHealed(spark, s"$dir/$table")
   }
 
   /** IVF search against the stored index. Zero-norm queries are kept
@@ -507,13 +506,19 @@ object AnnIndex {
     drifted
   }
 
+  /** The index's [[graft.BatchStore]] declaration: the inverted file,
+    * folded by row under its `cell` partitions, fed the embedded
+    * vectors. The centroids table is always a single batch-0 write
+    * (init/retrain only), so it is not listed and never folds.
+    */
+  def store(dir: String): graft.BatchStore =
+    graft.BatchStore("AnnIndex.init", Seq(graft.BatchTable.Rows(s"$dir/cells", Seq("cell"))),
+      graft.BatchStore.Vectors, (v, batchId) => addBatch(v.sparkSession, v, dir, batchId))
+
   /** Fold all `batch_id=N/cell=M` partitions of the inverted file into
     * the high-water batch id — small-file hygiene for a long-running ingest (#batches ×
     * #cells parquet leaves otherwise). Crash-safe write-then-swap; see
-    * [[graft.BatchSink.compact]] for the quiescence contract. The
-    * centroids table is always a single batch-0 write (init/retrain
-    * only), so only the cells table needs folding.
+    * [[graft.BatchSink.compact]] for the quiescence contract.
     */
-  def compact(spark: SparkSession, dir: String): Unit =
-    graft.BatchSink.compact(spark, s"$dir/cells", Seq("cell"))
+  def compact(spark: SparkSession, dir: String): Unit = store(dir).compact(spark)
 }

@@ -77,8 +77,7 @@ object AnnLshIndex {
     */
   private def readSigned(spark: SparkSession, dir: String, table: String,
                          np: Int): DataFrame = {
-    graft.BatchSink.recoverSwap(spark, s"$dir/$table")
-    val df = spark.read.parquet(s"$dir/$table")
+    val df = graft.BatchSink.readHealed(spark, s"$dir/$table")
     require(df.columns.contains("np"),
       s"AnnLshIndex: $dir/$table predates tear detection (no np column) — " +
         "re-run AnnLshIndex.init to rebuild the index")
@@ -170,11 +169,9 @@ object AnnLshIndex {
     * plane-count monitoring read. Index-sized metadata, not a corpus
     * scan.
     */
-  def stats(spark: SparkSession, dir: String): DataFrame = {
-    graft.BatchSink.recoverSwap(spark, s"$dir/stats")
-    spark.read.parquet(s"$dir/stats")
+  def stats(spark: SparkSession, dir: String): DataFrame =
+    graft.BatchSink.readHealed(spark, s"$dir/stats")
       .groupBy(col("sig")).agg(sum(col("n")).cast("long").as("n"))
-  }
 
   /** Multi-probe LSH search against the stored index. Same probe set,
     * scoring and rank as the inline [[AnnQueries.lshTopKMultiProbe]]
@@ -293,14 +290,23 @@ object AnnLshIndex {
     writeMeta(spark, dir, newNumPlanes)
   }
 
+  /** The index's [[graft.BatchStore]] declaration: the signed vectors
+    * (folded by row under their `sigp` partitions) and the per-batch
+    * bucket stats, which accumulate partitions at the same rate —
+    * [[stats]] sums per-signature rows, so their row fold is
+    * sum-invariant. Fed the embedded vectors.
+    */
+  def store(dir: String): graft.BatchStore =
+    graft.BatchStore("AnnLshIndex.init",
+      Seq(graft.BatchTable.Rows(s"$dir/vectors", Seq("sigp")),
+        graft.BatchTable.Rows(s"$dir/stats")),
+      graft.BatchStore.Vectors, (v, batchId) => addBatch(v.sparkSession, v, dir, batchId))
+
   /** Fold all batch partitions of both tables into the high-water
     * batch id — see
     * [[graft.BatchSink.compact]] for the crash-safety and quiescence
     * contract. Search results are identical before/after (spec'd); the
     * file count drops from #batches × #prefixes to #prefixes.
     */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    graft.BatchSink.compact(spark, s"$dir/vectors", Seq("sigp"))
-    graft.BatchSink.compact(spark, s"$dir/stats")
-  }
+  def compact(spark: SparkSession, dir: String): Unit = store(dir).compact(spark)
 }

@@ -139,19 +139,14 @@ object AnnPqStore {
       batchId, s"$dir/codes", full = false)
   }
 
-  private def readHealed(spark: SparkSession, path: String): DataFrame = {
-    graft.BatchSink.recoverSwap(spark, path)
-    spark.read.parquet(path)
-  }
-
   /** The stored trained artifact (m, j, cb) — heals a torn swap first. */
   def readCodebooks(spark: SparkSession, dir: String): DataFrame =
-    readHealed(spark, s"$dir/codebooks").select("m", "j", "cb")
+    graft.BatchSink.readHealed(spark, s"$dir/codebooks").select("m", "j", "cb")
 
   /** The stored codes (vec_id, c0..c{M-1}). */
   def readCodes(spark: SparkSession, dir: String): DataFrame = {
     val cols = "vec_id" +: (0 until AnnPq.M).map(m => s"c$m")
-    readHealed(spark, s"$dir/codes").select(cols.map(col): _*)
+    graft.BatchSink.readHealed(spark, s"$dir/codes").select(cols.map(col): _*)
   }
 
   /** ADC top-k from the STORED artifacts — identical ranking to the
@@ -183,8 +178,8 @@ object AnnPqStore {
                     queries: DataFrame, nprobe: Int, k: Int): DataFrame = {
     graft.expressions.GraftFunctions.register(spark)
     val cbs = readCodebooks(spark, dir)
-    val cents = readHealed(spark, s"$annDir/centroids").select("c_id", "cv")
-    val cells = readHealed(spark, s"$annDir/cells").select("vec_id", "cell")
+    val cents = graft.BatchSink.readHealed(spark, s"$annDir/centroids").select("c_id", "cv")
+    val cells = graft.BatchSink.readHealed(spark, s"$annDir/cells").select("vec_id", "cell")
     val codesWithCell = readCodes(spark, dir).join(cells, Seq("vec_id"))
     val probes = AnnIndex.probe(queries, cents, nprobe)
     if (storedResidual(spark, dir)) {
@@ -203,7 +198,15 @@ object AnnPqStore {
     }
   }
 
+  /** The store's [[graft.BatchStore]] declaration: the codes, per-vector
+    * rows folded by identity like the IVF cells, fed the embedded
+    * vectors. The codebooks are written once at init (retrain is a
+    * re-init), so they are not listed.
+    */
+  def store(dir: String): graft.BatchStore =
+    graft.BatchStore("AnnPqStore.init", Seq(graft.BatchTable.Rows(s"$dir/codes")),
+      graft.BatchStore.Vectors, (v, batchId) => addBatch(v.sparkSession, v, dir, batchId))
+
   /** Fold code batch partitions (quiesced, like every compact here). */
-  def compact(spark: SparkSession, dir: String): Unit =
-    graft.BatchSink.compact(spark, s"$dir/codes")
+  def compact(spark: SparkSession, dir: String): Unit = store(dir).compact(spark)
 }

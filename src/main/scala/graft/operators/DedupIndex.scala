@@ -106,11 +106,9 @@ object DedupIndex {
     * r14: the dedup dir-store readers were the one family that skipped
     * the heal and threw PATH_NOT_FOUND instead).
     */
-  private def readIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.BatchSink.recoverSwap(spark, s"$dir/fp")
-    graft.BatchSink.recoverSwap(spark, s"$dir/bands")
-    (spark.read.parquet(s"$dir/fp"), spark.read.parquet(s"$dir/bands"))
-  }
+  private def readIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+    (graft.BatchSink.readHealed(spark, s"$dir/fp"),
+      graft.BatchSink.readHealed(spark, s"$dir/bands"))
 
   /** Dedup `incoming` against the stored index. */
   def dedupBatch(spark: SparkSession, dir: String, incoming: DataFrame): DataFrame = {
@@ -317,6 +315,56 @@ object DedupIndex {
     graft.BatchSink.writeBatch(bandRows(accepted), batchId, s"$dir/bands", full = false)
   }
 
+  /** The dir store's [[graft.BatchStore]] declaration: both tables,
+    * folded by row, fed the accepted survivors through [[accept]].
+    */
+  def store(dir: String): graft.BatchStore =
+    graft.BatchStore("DedupIndex.init",
+      Seq(graft.BatchTable.Rows(s"$dir/fp"), graft.BatchTable.Rows(s"$dir/bands")),
+      graft.BatchStore.Survivors, (docs, batchId) => accept(docs, dir, batchId))
+
+  /** Where a maintenance relay dedups each batch and accepts its
+    * survivors: the dir store or the bucketed catalog tables. Both keep
+    * the pinned `batch_id < n` read and the idempotent per-batch
+    * accept, so a replayed batch re-derives and re-lands the same
+    * survivors.
+    */
+  sealed trait Backing {
+
+    /** The store the relay's guard, cadence and accept loop over. */
+    def store: graft.BatchStore
+
+    /** `incoming` deduped against the index as it stood before `batchId`. */
+    def survivors(incoming: DataFrame, batchId: Long): DataFrame
+  }
+
+  /** The parquet-dir store at `dir` ([[init]]). */
+  final case class Dir(dir: String) extends Backing {
+    def store: graft.BatchStore = DedupIndex.store(dir)
+    def survivors(incoming: DataFrame, batchId: Long): DataFrame =
+      dedupBatch(incoming.sparkSession, dir, incoming, batchId)
+  }
+
+  /** The bucketed catalog tables ([[initBucketed]]) — the far-scale
+    * mode, with zero index-side exchange per increment. The relay's
+    * stale-checkpoint guard is each epoch's one heal and listing
+    * refresh of both tables, so the read and the accept skip theirs
+    * (`heal = false`; single writer, so no new torn swap can appear
+    * mid-epoch). The tables fold only at a quiesce point
+    * ([[compactBucketed]] folds the WHOLE batch history, which a live
+    * epoch's crashed first attempt must never join), so the relay's
+    * cadence leaves them alone.
+    */
+  final case class Bucketed(fpTable: String, bandsTable: String) extends Backing {
+    def store: graft.BatchStore =
+      graft.BatchStore("DedupIndex.initBucketed",
+        Seq(BucketedTable(fpTable), BucketedTable(bandsTable)), graft.BatchStore.Survivors,
+        (docs, batchId) => acceptBucketed(docs, fpTable, bandsTable, batchId, heal = false))
+    def survivors(incoming: DataFrame, batchId: Long): DataFrame =
+      dedupBatchBucketed(incoming.sparkSession, fpTable, bandsTable, incoming, batchId,
+        heal = false)
+  }
+
   /** Fold all batch partitions of both tables into the high-water
     * batch id — small-file
     * hygiene after many accepted batches. Crash-safe write-then-swap
@@ -328,8 +376,7 @@ object DedupIndex {
     * stopped with its checkpoint committed, or between batch jobs).
     */
   def compact(spark: SparkSession, dir: String): Unit = {
-    graft.BatchSink.compact(spark, s"$dir/fp")
-    graft.BatchSink.compact(spark, s"$dir/bands")
+    store(dir).compact(spark)
     // the bloom rebuild RIDES the compaction (as the bloom scaladoc has
     // always promised — now actually done): the fold just rewrote every
     // key anyway, and a fold moves all rows to the high-water batch id,
@@ -623,25 +670,53 @@ object DedupIndex {
     * window); quiesce is still required for the same replay-correctness
     * reason as the dir store's `compact`.
     */
-  def compactBucketed(spark: SparkSession, fpTable: String, bandsTable: String): Unit = {
-    Seq(fpTable, bandsTable).foreach { table =>
-      recoverBucketedSwap(spark, table)
-      val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
+  def compactBucketed(spark: SparkSession, fpTable: String, bandsTable: String): Unit =
+    Bucketed(fpTable, bandsTable).store.compact(spark)
+
+  /** One bucketed index table as a [[graft.BatchTable]]. */
+  private final case class BucketedTable(name: String) extends graft.BatchTable {
+
+    /** Healed first — a table mid-swap would otherwise read as missing,
+      * and its init hint (initBucketed) DROPs the tables, destroying the
+      * batch history the swap protocol preserved. The listing comes
+      * from SHOW PARTITIONS (catalog metadata, no data scan) after a
+      * refresh: a prior epoch's dynamic overwrite replaced this
+      * partition's files. The collect holds one string per partition
+      * since the last [[compactBucketed]], so the quiesce-point
+      * compaction cadence bounds it.
+      */
+    def highWater(spark: SparkSession): Option[Long] = {
+      recoverBucketedSwap(spark, name)
+      if (!spark.catalog.tableExists(name)) None
+      else {
+        spark.catalog.refreshTable(name)
+        Some(spark.sql(s"SHOW PARTITIONS $name").collect().map(_.getString(0))
+          .filter(_.startsWith("batch_id="))
+          .map(_.stripPrefix("batch_id=").toLong)
+          .foldLeft(0L)(math.max))
+      }
+    }
+
+    def compactBelow(spark: SparkSession, upTo: Long): Unit = ()
+
+    def compact(spark: SparkSession): Unit = {
+      recoverBucketedSwap(spark, name)
+      val ident = spark.sessionState.sqlParser.parseTableIdentifier(name)
       val bucketSpec = spark.sessionState.catalog.getTableMetadata(ident).bucketSpec
         .getOrElse(throw new IllegalStateException(
-          s"DedupIndex.compactBucketed: $table has no bucket spec — not a bucketed index table"))
-      val highWater = spark.table(table)
+          s"DedupIndex.compactBucketed: $name has no bucket spec — not a bucketed index table"))
+      val highWater = spark.table(name)
         .agg(coalesce(max(col("batch_id").cast("long")), lit(0L))).head().getLong(0)
-      val dataCols = spark.table(table).columns.filterNot(_ == "batch_id")
+      val dataCols = spark.table(name).columns.filterNot(_ == "batch_id")
       // rows are disjoint across batches by accept's construction — a
       // plain rewrite, no distinct (the dir compact's invariant). The
       // repartition on the bucket key aligns tasks with buckets (same
       // Murmur3 hash family), so the fold lands ONE file per bucket
       // instead of tasks × buckets
-      val folded = spark.table(table)
+      val folded = spark.table(name)
         .select((dataCols.map(col) :+ lit(highWater).as("batch_id")).toIndexedSeq: _*)
         .repartition(bucketSpec.numBuckets, bucketSpec.bucketColumnNames.map(col): _*)
-      val staging = table + "_compact_swap"
+      val staging = name + "_compact_swap"
       spark.sql(s"DROP TABLE IF EXISTS $staging")
       // the same expected-vs-written verification the dir store's
       // compact inherits from BatchSink.replaceTable (review finding
@@ -668,7 +743,7 @@ object DedupIndex {
       if (expected == 0L) {
         spark.sql(s"DROP TABLE IF EXISTS $staging")
         throw new IllegalStateException(
-          s"DedupIndex.compactBucketed: refusing to replace $table with an EMPTY fold — " +
+          s"DedupIndex.compactBucketed: refusing to replace $name with an EMPTY fold — " +
             "the table read back 0 rows (drained? torn state?); the live table is untouched")
       }
       val written = spark.table(staging).count() // parquet footers only
@@ -680,7 +755,7 @@ object DedupIndex {
       }
       // arm the heal protocol BEFORE the destructive pair, then swap
       spark.sql(s"ALTER TABLE $staging SET TBLPROPERTIES ('$SwapPendingProp' = 'true')")
-      commitSwap(spark, table)
+      commitSwap(spark, name)
     }
   }
 }

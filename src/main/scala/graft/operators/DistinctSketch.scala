@@ -53,11 +53,13 @@ object DistinctSketch {
     * between compact's two renames leaves the live dir absent until
     * [[graft.BatchSink.recoverSwap]] promotes the completed swap.
     */
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    graft.BatchSink.recoverSwap(spark, dir)
+  def read(spark: SparkSession, dir: String): DataFrame =
+    kept(graft.BatchSink.readHealed(spark, dir))
+
+  /** Per-source KMV kept set of raw (source, h) rows. */
+  private def kept(rows: DataFrame): DataFrame = {
     val kmv = udaf(KmvAggregator)
-    spark.read.parquet(dir)
-      .groupBy(col("source")).agg(kmv(col("h")).as("kept"))
+    rows.groupBy(col("source")).agg(kmv(col("h")).as("kept"))
   }
 
   /** Distinct-count estimates served FROM THE STORED SKETCH — no corpus
@@ -66,21 +68,19 @@ object DistinctSketch {
   def estimate(spark: SparkSession, dir: String): DataFrame =
     SketchQueries.kmvEstimates(read(spark, dir))
 
-  /** The KMV-monoid normal form of raw (source, h) rows: fold through
-    * the aggregator, re-explode the kept set — ≤K rows per source, same
-    * schema.
+  /** The sketch's [[graft.BatchStore]] declaration: one table, folded to
+    * the KMV normal form (the aggregator's kept set re-exploded — ≤K
+    * rows per source, same schema), fed the accepted survivors.
     */
-  private[graft] def foldRows(rows: DataFrame): DataFrame = {
-    val kmv = udaf(KmvAggregator)
-    rows.groupBy(col("source")).agg(kmv(col("h")).as("kept"))
-      .select(col("source"), explode(col("kept")).as("h"))
-  }
+  def store(dir: String): graft.BatchStore =
+    graft.BatchStore("DistinctSketch.init",
+      Seq(graft.BatchTable.Monoid(dir,
+        kept(_).select(col("source"), explode(col("kept")).as("h")))),
+      graft.BatchStore.Survivors, (docs, batchId) => addBatch(docs, dir, batchId))
 
   /** MONOID compaction (r15): fold landed partitions through the KMV
     * merge, bounding the stored table at ≤K·|sources| rows regardless of
-    * batch count. Quiesced form; the relay's in-stream cadence uses
-    * [[graft.BatchSink.compactBelowWith]] with the same fold.
+    * batch count. Quiesced form of the relay's in-stream fold.
     */
-  def compact(spark: SparkSession, dir: String): Unit =
-    graft.BatchSink.compactWith(spark, dir)(foldRows)
+  def compact(spark: SparkSession, dir: String): Unit = store(dir).compact(spark)
 }

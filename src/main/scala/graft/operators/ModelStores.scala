@@ -70,19 +70,11 @@ object NbModelStore {
     writeBoth(docs, dir, batchId, full = false)
 
   /** Folded class counts (heals a torn compact swap first). */
-  def readCounts(spark: SparkSession, dir: String): DataFrame = {
-    graft.BatchSink.recoverSwap(spark, s"$dir/counts")
-    spark.read.parquet(s"$dir/counts")
-      .groupBy(col("b"))
-      .agg(sum(col("c1")).as("c1"), sum(col("c0")).as("c0"))
-  }
+  def readCounts(spark: SparkSession, dir: String): DataFrame =
+    foldCounts(graft.BatchSink.readHealed(spark, s"$dir/counts"))
 
-  def readPriors(spark: SparkSession, dir: String): DataFrame = {
-    graft.BatchSink.recoverSwap(spark, s"$dir/priors")
-    spark.read.parquet(s"$dir/priors")
-      .agg(coalesce(sum(col("n1")), lit(0L)).as("n1"),
-        coalesce(sum(col("n0")), lit(0L)).as("n0"))
-  }
+  def readPriors(spark: SparkSession, dir: String): DataFrame =
+    foldPriors(graft.BatchSink.readHealed(spark, s"$dir/priors"))
 
   /** The served model — same schema and smoothing as the oracled
     * `quality_classifier_model` relation, derived from the STORE.
@@ -105,23 +97,29 @@ object NbModelStore {
     CurationQueries.nbScoreFrom(bt, readCounts(spark, dir), readPriors(spark, dir))
   }
 
-  /** The sum-monoid normal forms of the two statistics tables — shared
-    * with the relay's in-stream compactBelowWith cadence.
+  /** The sum-monoid normal forms of the two statistics tables: what
+    * the reads compute, and what the compactions fold to.
     */
-  private[graft] def foldCounts(rows: DataFrame): DataFrame =
+  private def foldCounts(rows: DataFrame): DataFrame =
     rows.groupBy(col("b")).agg(sum(col("c1")).as("c1"), sum(col("c0")).as("c0"))
-  private[graft] def foldPriors(rows: DataFrame): DataFrame =
+  private def foldPriors(rows: DataFrame): DataFrame =
     rows.agg(coalesce(sum(col("n1")), lit(0L)).as("n1"),
       coalesce(sum(col("n0")), lit(0L)).as("n0"))
+
+  /** The store's [[graft.BatchStore]] declaration: both statistics
+    * tables, each folded through its sums, fed the accepted survivors.
+    */
+  def store(dir: String): graft.BatchStore =
+    graft.BatchStore("NbModelStore.init",
+      Seq(graft.BatchTable.Monoid(s"$dir/counts", foldCounts),
+        graft.BatchTable.Monoid(s"$dir/priors", foldPriors)),
+      graft.BatchStore.Survivors, (docs, batchId) => addBatch(docs, dir, batchId))
 
   /** MONOID compaction (r15): fold partitions through the sums, so the
     * counts table stays ≤64 rows and priors ONE row regardless of batch
     * count (the row-identity fold grew linearly). Quiesced form.
     */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    graft.BatchSink.compactWith(spark, s"$dir/counts")(foldCounts)
-    graft.BatchSink.compactWith(spark, s"$dir/priors")(foldPriors)
-  }
+  def compact(spark: SparkSession, dir: String): Unit = store(dir).compact(spark)
 }
 
 /** Persisted language-ID NB statistics (VERDICT r12 ask #1) — the same
@@ -155,20 +153,12 @@ object LangModelStore {
     writeBoth(docs, dir, batchId, full = false)
 
   /** Folded (lang, b, c) counts (heals a torn compact swap first). */
-  def readCounts(spark: SparkSession, dir: String): DataFrame = {
-    graft.BatchSink.recoverSwap(spark, s"$dir/counts")
-    spark.read.parquet(s"$dir/counts")
-      .groupBy(col("lang"), col("b"))
-      .agg(sum(col("c")).as("c"))
-  }
+  def readCounts(spark: SparkSession, dir: String): DataFrame =
+    foldCounts(graft.BatchSink.readHealed(spark, s"$dir/counts"))
 
   /** Folded per-lang priors. */
-  def readPriors(spark: SparkSession, dir: String): DataFrame = {
-    graft.BatchSink.recoverSwap(spark, s"$dir/priors")
-    spark.read.parquet(s"$dir/priors")
-      .groupBy(col("lang"))
-      .agg(sum(col("np")).as("np"))
-  }
+  def readPriors(spark: SparkSession, dir: String): DataFrame =
+    foldPriors(graft.BatchSink.readHealed(spark, s"$dir/priors"))
 
   /** The served model — same schema, smoothing, and ordering as the
     * oracled `lang_classifier_model` relation, derived from the STORE.
@@ -185,17 +175,23 @@ object LangModelStore {
   def score(spark: SparkSession, dir: String, docs: DataFrame): DataFrame =
     CurationQueries.langScoreDocs(docs, readCounts(spark, dir), readPriors(spark, dir))
 
-  /** Sum-monoid normal forms (shared with the relay's in-stream fold). */
-  private[graft] def foldCounts(rows: DataFrame): DataFrame =
+  /** Sum-monoid normal forms (the reads and the compactions). */
+  private def foldCounts(rows: DataFrame): DataFrame =
     rows.groupBy(col("lang"), col("b")).agg(sum(col("c")).as("c"))
-  private[graft] def foldPriors(rows: DataFrame): DataFrame =
+  private def foldPriors(rows: DataFrame): DataFrame =
     rows.groupBy(col("lang")).agg(sum(col("np")).as("np"))
 
+  /** The store's [[graft.BatchStore]] declaration — see
+    * [[NbModelStore.store]].
+    */
+  def store(dir: String): graft.BatchStore =
+    graft.BatchStore("LangModelStore.init",
+      Seq(graft.BatchTable.Monoid(s"$dir/counts", foldCounts),
+        graft.BatchTable.Monoid(s"$dir/priors", foldPriors)),
+      graft.BatchStore.Survivors, (docs, batchId) => addBatch(docs, dir, batchId))
+
   /** MONOID compaction (r15) — see [[NbModelStore.compact]]. */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    graft.BatchSink.compactWith(spark, s"$dir/counts")(foldCounts)
-    graft.BatchSink.compactWith(spark, s"$dir/priors")(foldPriors)
-  }
+  def compact(spark: SparkSession, dir: String): Unit = store(dir).compact(spark)
 }
 
 /** Persisted BPE word-frequency statistics; see [[NbModelStore]] doc. */
@@ -213,11 +209,8 @@ object BpeStatsStore {
     graft.BatchSink.writeBatch(counts(docs), batchId, dir, full = false)
 
   /** Folded vocab counts (heals a torn compact swap first). */
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    graft.BatchSink.recoverSwap(spark, dir)
-    spark.read.parquet(dir)
-      .groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))
-  }
+  def read(spark: SparkSession, dir: String): DataFrame =
+    foldRows(graft.BatchSink.readHealed(spark, dir))
 
   /** Replay the (driver-side, vocab-capped) merge loop from the stored
     * counts — the same sufficient-statistic collect the inline trainer
@@ -242,13 +235,19 @@ object BpeStatsStore {
       .orderBy("merge_rank")
   }
 
-  /** Sum-monoid normal form (shared with the relay's in-stream fold). */
-  private[graft] def foldRows(rows: DataFrame): DataFrame =
+  /** Sum-monoid normal form (the read and the compactions). */
+  private def foldRows(rows: DataFrame): DataFrame =
     rows.groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))
+
+  /** The store's [[graft.BatchStore]] declaration: the vocab table,
+    * folded through its sums, fed the accepted survivors.
+    */
+  def store(dir: String): graft.BatchStore =
+    graft.BatchStore("BpeStatsStore.init", Seq(graft.BatchTable.Monoid(dir, foldRows)),
+      graft.BatchStore.Survivors, (docs, batchId) => addBatch(docs, dir, batchId))
 
   /** MONOID compaction (r15): the vocab table folds to one row per
     * distinct word regardless of batch count. Quiesced form.
     */
-  def compact(spark: SparkSession, dir: String): Unit =
-    graft.BatchSink.compactWith(spark, dir)(foldRows)
+  def compact(spark: SparkSession, dir: String): Unit = store(dir).compact(spark)
 }

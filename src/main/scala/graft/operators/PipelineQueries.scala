@@ -225,9 +225,8 @@ object PipelineQueries {
         RelayFixtures.initAnn(existing, annDir)
       }
       graft.streaming.EventStreams.indexMaintenanceRelay(
-        s, inDir, base + "/dedup-unused", annDir, base + "/ckpt",
+        s, inDir, DedupIndex.Bucketed(fpT, bandsT), annDir, base + "/ckpt",
         maxFilesPerTrigger = Some(1),
-        bucketedDedup = Some((fpT, bandsT)),
         trigger = Some(Trigger.AvailableNow())).awaitTermination()
       val fp = s.table(fpT).select(
         lit("fp").as("store"), col("fp").as("k1"),
@@ -266,7 +265,7 @@ object PipelineQueries {
         RelayFixtures.initAnn(existing, annDir)
       }
       graft.streaming.EventStreams.indexMaintenanceRelay(
-        s, inDir, dedupDir, annDir, base + "/ckpt",
+        s, inDir, DedupIndex.Dir(dedupDir), annDir, base + "/ckpt",
         maxFilesPerTrigger = Some(1),
         compactEvery = Some(2),
         trigger = Some(Trigger.AvailableNow())).awaitTermination()
@@ -732,7 +731,7 @@ object PipelineQueries {
     * remaining 20% as two mtime-ordered landing files
     * ([[RelayFixtures.stageIncrements]]; maxFilesPerTrigger = 1 ⇒ two
     * maintenance cycles, batches 1 and 2), and drive the REAL
-    * indexMaintenanceRelay with all optional store dirs wired. Reruns
+    * indexMaintenanceRelay with every store wired. Reruns
     * are exactly-once: the `_INIT_DONE` step pins init per salted base
     * (every store init is a full overwrite, so a crash mid-init
     * re-inits — RelayInitCrashSpec), and every call starts the relay,
@@ -748,16 +747,13 @@ object PipelineQueries {
       initRelayStores(s, d, base)
     }
     graft.streaming.EventStreams.indexMaintenanceRelay(
-      s, inDir, base + "/dedup", base + "/ann", base + "/ckpt",
+      s, inDir, DedupIndex.Dir(base + "/dedup"), base + "/ann", base + "/ckpt",
       provider = RelayEmbedProvider,
       maxFilesPerTrigger = Some(1),
-      pqDir = Some(s"$base/pq"),
-      lshDir = Some(s"$base/lsh"),
-      sketchDir = Some(s"$base/sketch"),
-      distinctSketchDir = Some(s"$base/distinct"),
-      nbModelDir = Some(s"$base/nbmodel"),
-      langModelDir = Some(s"$base/langmodel"),
-      bpeStatsDir = Some(s"$base/bpestats"),
+      stores = Seq(AnnLshIndex.store(s"$base/lsh"), AnnPqStore.store(s"$base/pq"),
+        SourceSketch.store(s"$base/sketch"), DistinctSketch.store(s"$base/distinct"),
+        NbModelStore.store(s"$base/nbmodel"), LangModelStore.store(s"$base/langmodel"),
+        BpeStatsStore.store(s"$base/bpestats")),
       trigger = Some(Trigger.AvailableNow())).awaitTermination()
     base
   }

@@ -70,28 +70,29 @@ object SourceSketch {
     * renames leaves the live dir absent until recoverSwap promotes the
     * completed swap).
     */
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    graft.BatchSink.recoverSwap(spark, dir)
-    spark.read.parquet(dir)
-      .groupBy(col("source"), col("perm")).agg(min(col("m")).as("m"))
-  }
+  def read(spark: SparkSession, dir: String): DataFrame =
+    foldRows(graft.BatchSink.readHealed(spark, dir))
 
   /** Overlap matrix served FROM THE STORED SKETCH — no corpus access. */
   def estimate(spark: SparkSession, dir: String): DataFrame =
     pairEstimates(read(spark, dir))
 
-  /** The min-monoid normal form of raw sketch rows — shared by [[read]]
-    * conceptually and by the compaction folds below.
-    */
-  private[graft] def foldRows(rows: DataFrame): DataFrame =
+  /** The min-monoid normal form of raw sketch rows. */
+  private def foldRows(rows: DataFrame): DataFrame =
     rows.groupBy(col("source"), col("perm")).agg(min(col("m")).as("m"))
+
+  /** The sketch's [[graft.BatchStore]] declaration: one table, folded
+    * through the elementwise min, fed the accepted survivors — the
+    * sketch tracks the corpus the indexes hold, not raw arrivals.
+    */
+  def store(dir: String): graft.BatchStore =
+    graft.BatchStore("SourceSketch.init", Seq(graft.BatchTable.Monoid(dir, foldRows)),
+      graft.BatchStore.Survivors, (docs, batchId) => addBatch(docs, dir, batchId))
 
   /** MONOID compaction (r15): fold landed partitions through the
     * elementwise min, so the stored table stays at |sources|·16 rows
     * regardless of batch count (the row-identity fold grew linearly).
-    * Quiesced form; the relay's in-stream cadence uses
-    * [[graft.BatchSink.compactBelowWith]] with the same fold.
+    * Quiesced form of the relay's in-stream fold.
     */
-  def compact(spark: SparkSession, dir: String): Unit =
-    graft.BatchSink.compactWith(spark, dir)(foldRows)
+  def compact(spark: SparkSession, dir: String): Unit = store(dir).compact(spark)
 }

@@ -145,15 +145,6 @@ object IngestPipeline {
       .drop("text")
   }
 
-  def chunkAndEnrich(
-      files: DataFrame,
-      settings: PipelineSettings = PipelineSettings.default,
-      context: ContextProvider = new HeadlineContextProvider,
-      chunkSize: Int = 200,
-      chunkOverlap: Int = 40): DataFrame =
-    enrich(recursiveChunkRel(ingestFilter(files, settings), chunkSize, chunkOverlap),
-      settings, context)
-
   /** Embed stage: mapPartitions with per-partition provider instance and
     * order-preserving batches (P12/P13/A5). Output adds `embedding`.
     */

@@ -1,7 +1,8 @@
 package graft.streaming
 
+import graft.operators.{AnnIndex, DedupIndex}
 import graft.pipeline.{EmbeddingProvider, HashProjectionEmbedder, IngestPipeline}
-import graft.PipelineSettings
+import graft.{BatchStore, PipelineSettings}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -271,13 +272,11 @@ object EventStreams {
   /** THE session gap fold — single source of truth for both sessionize
     * variants (the bounded/unbounded parity claim rests on them
     * sharing this definition). Events arrive as (tsMicros, event_id)
-    * pairs and are sorted here, so in-batch disorder is healed
-    * identically in both forms.
-    */
-  /** PRECONDITION: `events` ascending by (ts, id) — both call sites
-    * feed [[cappedSmallest]] output, which is already sorted; a second
-    * sort here cost O(n log n) per group per micro-batch on the hot
-    * stateful path for nothing (review finding r14).
+    * pairs, already ascending: both call sites feed [[cappedSmallest]]
+    * output, which sorts each group's slice, so in-batch disorder is
+    * healed identically in both forms and the fold itself never sorts
+    * (a second sort cost O(n log n) per group per micro-batch on the
+    * hot stateful path for nothing — review finding r14).
     */
   private def foldSessions(
       userId: Long, prior: Option[SessionState],
@@ -397,6 +396,34 @@ object EventStreams {
   final case class FunnelInTs(user_id: Long, event_type: String, tsMicros: Long,
                               ts: java.sql.Timestamp)
 
+  /** THE funnel advance fold — single source of truth for both funnel
+    * variants (their parity claims rest on sharing it); the one
+    * semantic switch is `clearOnComplete` (the bounded form's
+    * repeat-conversion reset). Events arrive as (tsMicros, event_type)
+    * pairs, already ascending: the caller's [[cappedSmallest]] sorts
+    * each group's slice, so in-batch disorder is healed identically in
+    * both forms (see [[foldSessions]]).
+    */
+  private def foldFunnel(
+      userId: Long, steps: Seq[String], times0: Vector[Long],
+      events: Seq[(Long, String)],
+      clearOnComplete: Boolean): (Vector[FunnelOut], Vector[Long]) = {
+    var times = times0
+    val out = Vector.newBuilder[FunnelOut]
+    for ((ts, tp) <- events) {
+      val next = times.length
+      if (next < steps.length && tp == steps(next) &&
+        (times.isEmpty || ts > times.last)) {
+        times = times :+ ts
+        out += FunnelOut(userId, next + 1, tp, ts)
+        // completed: clear immediately — the next first-step event
+        // opens a fresh cycle
+        if (clearOnComplete && times.length == steps.length) times = Vector.empty
+      }
+    }
+    (out.result(), times)
+  }
+
   /** Streaming form of the batch `funnel_steps` operator: a per-user
     * state machine over flatMapGroupsWithState that emits a row the
     * moment a user ADVANCES a funnel step — the live conversion feed a
@@ -425,34 +452,6 @@ object EventStreams {
     * once-per-user-ever advances for bounded state (completion clears,
     * attribution horizon evicts).
     */
-  /** THE funnel advance fold — single source of truth for both funnel
-    * variants (their parity claims rest on sharing it); the one
-    * semantic switch is `clearOnComplete` (the bounded form's
-    * repeat-conversion reset). Events arrive as (tsMicros, event_type)
-    * pairs and are sorted here, healing in-batch disorder identically
-    * in both forms.
-    */
-  private def foldFunnel(
-      userId: Long, steps: Seq[String], times0: Vector[Long],
-      events: Seq[(Long, String)],
-      clearOnComplete: Boolean): (Vector[FunnelOut], Vector[Long]) = {
-    // PRECONDITION: events ascending by (ts, type) — see foldSessions
-    var times = times0
-    val out = Vector.newBuilder[FunnelOut]
-    for ((ts, tp) <- events) {
-      val next = times.length
-      if (next < steps.length && tp == steps(next) &&
-        (times.isEmpty || ts > times.last)) {
-        times = times :+ ts
-        out += FunnelOut(userId, next + 1, tp, ts)
-        // completed: clear immediately — the next first-step event
-        // opens a fresh cycle
-        if (clearOnComplete && times.length == steps.length) times = Vector.empty
-      }
-    }
-    (out.result(), times)
-  }
-
   def funnelAdvance(
       events: Dataset[FunnelIn],
       steps: Seq[String] = Seq("view", "click", "purchase"),
@@ -647,97 +646,83 @@ object EventStreams {
     writer.start()
   }
 
+  /** The relay's read-only drift audit: every `every` batches, the mean
+    * recall of `queries` over the stored IVF index
+    * ([[graft.operators.AnnIndex.recallAudit]], nprobe 2) lands under
+    * the epoch's own `batch_id` partition in `dir`.
+    */
+  final case class RecallAudit(every: Int, queries: DataFrame, dir: String)
+
   /** Streaming index maintenance: the micro-batch form of the full
     * corpus lifecycle (IngestLifecycleSpec's batch shape) — every
-    * arriving micro-batch of documents is deduped against the two
-    * persisted indexes, the survivors are accepted into the dedup index
-    * ([[graft.operators.DedupIndex]]), embedded ONCE through the real
-    * [[IngestPipeline.embedStage]], and landed in the ANN inverted file
-    * ([[graft.operators.AnnIndex]]) — and, when `lshDir` is set, in the
-    * persisted LSH index ([[graft.operators.AnnLshIndex]]) too — so
-    * every index stays current with the stream, transactionally.
+    * arriving micro-batch of documents is deduped against the persisted
+    * `dedup` index, the survivors are accepted into it, embedded ONCE
+    * through the real [[IngestPipeline.embedStage]], and landed in the
+    * ANN inverted file ([[graft.operators.AnnIndex]]) and then in each
+    * of `stores`, in order — each store's [[graft.BatchStore]]
+    * declaration says whether it takes the survivors or the vectors —
+    * so every store stays current with the stream, transactionally.
     *
     * Exactly-once: foreachBatch may replay an epoch after a crash
-    * anywhere between the two index writes. The dedup read is PINNED to
-    * strictly-earlier batch partitions (`dedupBatch(..., batchId)`), so
-    * a replay re-derives the SAME survivor set even though its own
-    * earlier `accept` already landed; both sinks are idempotent
-    * per-batch partition overwrites, so the replay heals any tear
-    * instead of double-appending (StreamingIndexSpec injects the crash
-    * at the worst point and proves rebuild-equality after restart).
-    * Micro-batch epoch e lands as `batch_id` e+1 — batch 0 is both
-    * indexes' init partition.
+    * anywhere between the writes. The dedup read is PINNED to
+    * strictly-earlier batch partitions, so a replay re-derives the SAME
+    * survivor set even though its own earlier accept already landed;
+    * every write is an idempotent per-batch partition overwrite, so the
+    * replay heals any tear instead of double-appending
+    * (StreamingIndexSpec injects the crash at the worst point and
+    * proves rebuild-equality after restart). Micro-batch epoch e lands
+    * as `batch_id` e+1 — batch 0 is every store's init partition.
     *
     * MAINTENANCE CADENCE — the lifecycle hooks that keep a long-running
     * relay healthy without an operator babysitting it:
     *
     *  - `compactEvery = Some(n)`: every n batches, fold the
-    *    accumulated `batch_id` partitions of every index table via
-    *    [[graft.BatchSink.compactBelow]] (small-file hygiene: a
-    *    micro-batch sink otherwise grows #batches × #values parquet
-    *    leaves). Runs at the START of the epoch and folds only
-    *    strictly-earlier partitions — replay-safe by compactBelow's
-    *    construction (the pinned `batch_id < e` dedup read selects the
-    *    same rows before and after the fold, and the epoch's own id
-    *    never moves), so a crash anywhere in the epoch replays
-    *    correctly. This is why the in-stream cadence must NOT call
-    *    [[graft.BatchSink.compact]]: a whole-history fold would pull
-    *    the current epoch's crashed first attempt into the fold and
-    *    the replay's dynamic overwrite would then clobber folded
-    *    corpus partitions.
-    *  - `auditEvery = Some(m)` (+ `auditQueries`, `auditDir`): every m
-    *    batches, run the READ-ONLY drift audit ([[graft.operators
-    *    .AnnIndex.recallAudit]] over the stored IVF index) and land
-    *    its one-row mean under the epoch's own `batch_id` partition in
-    *    `auditDir` — an idempotent monitoring sink, replay-safe like
-    *    every other write here. The audit deliberately does NOT
-    *    trigger [[graft.operators.AnnIndex.retrain]] in-stream:
-    *    retrain folds the whole batch history (its quiescence
-    *    contract), which is exactly what a live epoch must not do —
-    *    an operator watches the audit table (or wires an alert) and
-    *    runs `retrainIfDrifted` with the stream STOPPED.
+    *    accumulated `batch_id` partitions of every store table
+    *    (`BatchTable.compactBelow`: small-file hygiene — a micro-batch
+    *    sink otherwise grows #batches × #values parquet leaves; monoid
+    *    stores fold to their normal form). Runs at the START of the
+    *    epoch and folds only strictly-earlier partitions — replay-safe
+    *    by [[graft.BatchSink.compactBelow]]'s construction (the pinned
+    *    `batch_id < e` dedup read selects the same rows before and
+    *    after the fold, and the epoch's own id never moves), so a crash
+    *    anywhere in the epoch replays correctly. This is why the
+    *    in-stream cadence must NOT call [[graft.BatchSink.compact]]: a
+    *    whole-history fold would pull the current epoch's crashed first
+    *    attempt into the fold and the replay's dynamic overwrite would
+    *    then clobber folded corpus partitions. The bucketed dedup
+    *    tables fold only at a quiesce point.
+    *  - `audit = Some(RecallAudit(m, queries, dir))`: every m batches,
+    *    run the READ-ONLY drift audit over the stored IVF index and
+    *    land its one-row mean — an idempotent monitoring sink,
+    *    replay-safe like every other write here. The audit
+    *    deliberately does NOT trigger
+    *    [[graft.operators.AnnIndex.retrain]] in-stream: retrain folds
+    *    the whole batch history (its quiescence contract), which is
+    *    exactly what a live epoch must not do — an operator watches the
+    *    audit table (or wires an alert) and runs `retrainIfDrifted`
+    *    with the stream STOPPED.
+    *
+    * The source schema is inferred from `inputDir`, so it must hold a
+    * landed file before the relay starts.
     */
   def indexMaintenanceRelay(
       spark: SparkSession,
       inputDir: String,
-      dedupDir: String,
+      dedup: DedupIndex.Backing,
       annDir: String,
       checkpointDir: String,
       provider: EmbeddingProvider = new HashProjectionEmbedder(64),
       maxFilesPerTrigger: Option[Int] = None,
       betweenSinks: Long => Unit = _ => (),
-      lshDir: Option[String] = None,
+      stores: Seq[BatchStore] = Nil,
       compactEvery: Option[Int] = None,
-      auditEvery: Option[Int] = None,
-      auditQueries: Option[DataFrame] = None,
-      auditDir: Option[String] = None,
-      auditNprobe: Int = 2,
-      sketchDir: Option[String] = None,
-      distinctSketchDir: Option[String] = None,
-      nbModelDir: Option[String] = None,
-      bpeStatsDir: Option[String] = None,
-      langModelDir: Option[String] = None,
-      pqDir: Option[String] = None,
-      bucketedDedup: Option[(String, String)] = None,
-      relaySchema: Option[org.apache.spark.sql.types.StructType] = None,
+      audit: Option[RecallAudit] = None,
       trigger: Option[org.apache.spark.sql.streaming.Trigger] = None): StreamingQuery = {
     require(compactEvery.forall(_ >= 1), s"compactEvery must be >= 1, got $compactEvery")
-    require(auditEvery.forall(_ >= 1), s"auditEvery must be >= 1, got $auditEvery")
-    require(auditEvery.isEmpty || (auditQueries.nonEmpty && auditDir.nonEmpty),
-      "indexMaintenanceRelay: auditEvery needs auditQueries and auditDir")
-    // bucketedDedup = Some((fpTable, bandsTable)): the dedup leg runs
-    // against the BUCKETED catalog store (zero index-side exchange per
-    // increment — the post-promotion far-scale mode); `dedupDir` is
-    // then unused. Same pinned-read + idempotent-partition replay
-    // contract (DedupIndex.dedupBatchBucketed/acceptBucketed), same
-    // stale-checkpoint guard (answered from SHOW PARTITIONS — a
-    // catalog metadata op, no data scan). In-stream compaction is NOT
-    // run for the bucketed store: compactBucketed folds the WHOLE
-    // batch history (the quiesce-only contract, like BatchSink.compact
-    // — a live epoch's crashed first attempt must never be folded), so
-    // bucketed compaction belongs at a quiesce point.
-    val srcSchema = relaySchema.getOrElse(inferSourceSchema(spark, inputDir))
-    val reader = spark.readStream.schema(srcSchema)
+    require(audit.forall(_.every >= 1), s"audit.every must be >= 1, got ${audit.map(_.every)}")
+    val indexed = AnnIndex.store(annDir) +: stores
+    val all = dedup.store +: indexed
+    val reader = spark.readStream.schema(inferSourceSchema(spark, inputDir))
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toLong))
     val writer = reader
       .parquet(inputDir)
@@ -745,202 +730,57 @@ object EventStreams {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         val batchId = epochId + 1
-        // the index dirs are COUPLED to this checkpoint's epoch counter:
-        // restarting against existing indexes with a FRESH checkpoint
+        // every store is COUPLED to this checkpoint's epoch counter:
+        // restarting against existing stores with a FRESH checkpoint
         // restarts epochs at 0 and would dynamic-overwrite old batch
         // partitions piecemeal — silent index corruption. A replay of
         // the current epoch legitimately sees its own partition
         // (max == batchId); anything beyond that is a stale-checkpoint
-        // signal, so fail loudly before writing. BOTH index dirs are
-        // checked — the ANN dir can be from a different lineage (or
-        // ahead of the dedup index after a torn cycle + re-init of only
-        // one side), and a dedup-only check would let its old batch
-        // partitions be dynamic-overwritten piecemeal. Answered from
-        // the PARTITION LISTING (one directory list per index,
-        // O(#batches)) — never by scanning the index data. A missing
-        // dir is an explicit not-initialized error, not a raw
-        // FileNotFoundException from listStatus.
-        def maxLandedBatch(dir: String, initHint: String): Long = {
-          // heal a torn quiesce-point write-then-swap BEFORE the
-          // existence check (the dir-store twin of the table path's
-          // heal below — review finding r14): a crash between
-          // commitSwapDir's renames leaves the live dir momentarily
-          // absent beside a completed .swap, and the unhealed check
-          // would misdiagnose it as "not initialized" — whose hint
-          // (re-run init) full-overwrites the batch history the swap
-          // protocol preserved.
-          graft.BatchSink.recoverSwap(spark, dir)
-          val p = new org.apache.hadoop.fs.Path(dir)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          require(fs.exists(p),
-            s"indexMaintenanceRelay: index table $dir does not exist — " +
-              s"index not initialized; run $initHint first")
-          graft.BatchSink.batchIds(spark, dir).foldLeft(0L)(math.max)
-        }
-        def maxLandedBatchTable(tbl: String, initHint: String): Long = {
-          // heal a torn quiesce-point swap (compactBucketed /
-          // promoteBucketed) BEFORE the existence check — a table
-          // mid-swap would otherwise be misdiagnosed as "not
-          // initialized", and following that hint (initBucketed) DROPs
-          // the tables, destroying the batch history the swap protocol
-          // preserved. This is also the epoch's ONE heal point: the
-          // dedupBatchBucketed/acceptBucketed calls below skip their
-          // own recover pass (heal = false) — single writer, so no new
-          // torn swap can appear mid-epoch.
-          graft.operators.DedupIndex.recoverBucketedSwap(spark, tbl)
-          require(spark.catalog.tableExists(tbl),
-            s"indexMaintenanceRelay: index table $tbl does not exist — " +
-              s"index not initialized; run $initHint first")
-          // drop cached listings: a prior epoch's dynamic partition
-          // overwrite replaced this partition's FILES
-          spark.catalog.refreshTable(tbl)
-          // bounded collect (VERDICT r16 watch item): one string per
-          // batch_id partition, i.e. O(#batches since the last
-          // compactBucketed) rows — the quiesce-point compaction folds
-          // the history back to one partition, so the compaction
-          // cadence IS the bound (at compactEvery-style cadences this
-          // is tens of rows; an operator who never compacts grows it
-          // linearly in epochs, which the small-file problem would
-          // surface long before the driver's memory does)
-          spark.sql(s"SHOW PARTITIONS $tbl").collect().map(_.getString(0))
-            .filter(_.startsWith("batch_id="))
-            .map(_.stripPrefix("batch_id=").toLong)
-            .foldLeft(0L)(math.max)
-        }
-        // one stale-checkpoint contract for BOTH store layouts — the
-        // dir path and the bucketed path must never diverge in wording
-        // or threshold (a replay of the current epoch legitimately sees
-        // its own partition: max == batchId)
-        def assertNotStale(tbl: String, maxExisting: Long): Unit =
-          require(maxExisting <= batchId,
-            s"indexMaintenanceRelay: index table $tbl already holds batch_id=$maxExisting " +
+        // signal, so fail loudly before writing. EVERY table is checked
+        // — one store can be from a different lineage (or ahead of
+        // another after a torn cycle + re-init of only one side).
+        // highWater heals a torn quiesce-point swap BEFORE the
+        // existence check (a table mid-swap is momentarily absent, and
+        // following the not-initialized hint — re-run init — would
+        // overwrite the batch history the swap protocol preserved),
+        // then answers from the partition listing, never the data.
+        for (st <- all; t <- st.tables) {
+          val landed = t.highWater(spark)
+          require(landed.nonEmpty,
+            s"indexMaintenanceRelay: index table ${t.name} does not exist — " +
+              s"index not initialized; run ${st.init} first")
+          require(landed.get <= batchId,
+            s"indexMaintenanceRelay: index table ${t.name} already holds batch_id=${landed.get} " +
               s"but this stream is at batch_id=$batchId — the checkpoint at a different " +
               "location than the one that built the index? Re-init the indexes or restore " +
               "the original checkpoint directory")
-        bucketedDedup.foreach { case (fp, bands) =>
-          Seq(fp, bands).foreach(tbl =>
-            assertNotStale(tbl, maxLandedBatchTable(tbl, "DedupIndex.initBucketed")))
-        }
-        (bucketedDedup.fold(
-          Seq(s"$dedupDir/fp" -> "DedupIndex.init", s"$dedupDir/bands" -> "DedupIndex.init"))(
-          _ => Seq.empty) ++
-          Seq(s"$annDir/cells" -> "AnnIndex.init") ++
-          lshDir.map(l => s"$l/vectors" -> "AnnLshIndex.init") ++
-          pqDir.map(p => s"$p/codes" -> "AnnPqStore.init") ++
-          sketchDir.map(sd => sd -> "SourceSketch.init") ++
-          distinctSketchDir.map(sd => sd -> "DistinctSketch.init") ++
-          nbModelDir.toSeq.flatMap(nd => Seq(s"$nd/counts" -> "NbModelStore.init",
-            s"$nd/priors" -> "NbModelStore.init")) ++
-          langModelDir.toSeq.flatMap(ld => Seq(s"$ld/counts" -> "LangModelStore.init",
-            s"$ld/priors" -> "LangModelStore.init")) ++
-          bpeStatsDir.map(bd => bd -> "BpeStatsStore.init")).foreach { case (tbl, hint) =>
-          assertNotStale(tbl, maxLandedBatch(tbl, hint))
         }
         // cadence: fold strictly-earlier batch partitions BEFORE this
         // epoch touches anything (see the compactEvery scaladoc note on
         // why the in-stream fold must be compactBelow, never compact)
-        compactEvery.filter(n => batchId % n == 0).foreach { _ =>
-          if (bucketedDedup.isEmpty) {
-            graft.BatchSink.compactBelow(spark, s"$dedupDir/fp", batchId)
-            graft.BatchSink.compactBelow(spark, s"$dedupDir/bands", batchId)
-          }
-          graft.BatchSink.compactBelow(spark, s"$annDir/cells", batchId, Seq("cell"))
-          lshDir.foreach { l =>
-            graft.BatchSink.compactBelow(spark, s"$l/vectors", batchId, Seq("sigp"))
-            // the per-batch bucket-stats table accumulates partitions
-            // at the same rate as vectors; stats() sums per-signature
-            // rows, so the fold is sum-invariant
-            graft.BatchSink.compactBelow(spark, s"$l/stats", batchId)
-          }
-          // PQ codes are per-vector rows keyed by batch — folding is
-          // row-identity like the IVF cells table
-          pqDir.foreach(p => graft.BatchSink.compactBelow(spark, s"$p/codes", batchId))
-          // the sketch/model-store tables are commutative-monoid stores
-          // (elementwise min / KMV merge / count sums), so their fold
-          // AGGREGATES to the monoid normal form (r15 — the row-identity
-          // fold kept every batch's rows, growing these "KB-sized"
-          // tables linearly with batch count); each store owns its fold
-          sketchDir.foreach(sd => graft.BatchSink.compactBelowWith(spark, sd, batchId)(
-            graft.operators.SourceSketch.foldRows))
-          distinctSketchDir.foreach(sd => graft.BatchSink.compactBelowWith(spark, sd, batchId)(
-            graft.operators.DistinctSketch.foldRows))
-          nbModelDir.foreach { nd =>
-            graft.BatchSink.compactBelowWith(spark, s"$nd/counts", batchId)(
-              graft.operators.NbModelStore.foldCounts)
-            graft.BatchSink.compactBelowWith(spark, s"$nd/priors", batchId)(
-              graft.operators.NbModelStore.foldPriors)
-          }
-          langModelDir.foreach { ld =>
-            graft.BatchSink.compactBelowWith(spark, s"$ld/counts", batchId)(
-              graft.operators.LangModelStore.foldCounts)
-            graft.BatchSink.compactBelowWith(spark, s"$ld/priors", batchId)(
-              graft.operators.LangModelStore.foldPriors)
-          }
-          bpeStatsDir.foreach(bd => graft.BatchSink.compactBelowWith(spark, bd, batchId)(
-            graft.operators.BpeStatsStore.foldRows))
-        }
-        val survivors = bucketedDedup.fold(
-            graft.operators.DedupIndex.dedupBatch(spark, dedupDir, batch, batchId)) {
-            case (fp, bands) =>
-              // heal = false: the stale-checkpoint guard above already
-              // ran this epoch's one recover + refresh pass per table
-              graft.operators.DedupIndex.dedupBatchBucketed(
-                spark, fp, bands, batch, batchId, heal = false)
-          }
-          .localCheckpoint() // one materialized derivation feeds both index writes
-        bucketedDedup match {
-          case Some((fp, bands)) =>
-            graft.operators.DedupIndex.acceptBucketed(
-              survivors, fp, bands, batchId, heal = false)
-          case None =>
-            graft.operators.DedupIndex.accept(survivors, dedupDir, batchId)
-        }
+        if (compactEvery.exists(batchId % _ == 0)) all.foreach(_.compactBelow(spark, batchId))
+        val survivors = dedup.survivors(batch, batchId)
+          .localCheckpoint() // one materialized derivation feeds every write
+        dedup.store.add(survivors, batchId)
         betweenSinks(batchId)
         val vectors = IngestPipeline.embedStage(
             survivors.select(col("doc_id"), col("text").as("embedded_text")), provider)
           .select(col("doc_id").as("vec_id"), col("embedding"))
-          .localCheckpoint() // one embed pass feeds every index write
-        graft.operators.AnnIndex.addBatch(spark, vectors, annDir, batchId)
-        // the optional third index: same batch id, same idempotent
-        // partition overwrite — a replay after a crash between the IVF
-        // and LSH adds heals the tear exactly like the dedup/IVF pair
-        lshDir.foreach(l => graft.operators.AnnLshIndex.addBatch(spark, vectors, l, batchId))
-        // the optional PQ code store: arriving vectors are encoded
-        // against the STORED codebooks (trained at init; retrain is a
-        // re-init) — same batch id, same idempotent partition overwrite
-        pqDir.foreach(p => graft.operators.AnnPqStore.addBatch(spark, vectors, p, batchId))
-        // the optional source-overlap sketch rides the same cycle over
-        // the ACCEPTED survivors (the sketch tracks the corpus the
-        // indexes hold, not raw arrivals): same batch id, idempotent
-        // partition overwrite, elementwise-min fold at read time — a
-        // crash before this write is healed by the replay like every
-        // other sink here
-        sketchDir.foreach(sd => graft.operators.SourceSketch.addBatch(survivors, sd, batchId))
-        // ... and the distinct-count sketch likewise: KMV's idempotent
-        // monoid fold gives the same replay-heals argument
-        distinctSketchDir.foreach(sd =>
-          graft.operators.DistinctSketch.addBatch(survivors, sd, batchId))
-        // the trained-artifact stores ride the same cycle over the
-        // accepted survivors: their sufficient statistics (class/word
-        // counts) are sum-monoids over disjoint doc batches, so the
-        // per-batch idempotent partition overwrite gives the identical
-        // replay-heals story — and the NB model / BPE merge table stay
-        // current with the stream (VERDICT r10 #6)
-        nbModelDir.foreach(nd => graft.operators.NbModelStore.addBatch(survivors, nd, batchId))
-        langModelDir.foreach(ld => graft.operators.LangModelStore.addBatch(survivors, ld, batchId))
-        bpeStatsDir.foreach(bd => graft.operators.BpeStatsStore.addBatch(survivors, bd, batchId))
+          .localCheckpoint() // one embed pass feeds every vector store
+        indexed.foreach { st =>
+          st.add(if (st.feed == BatchStore.Vectors) vectors else survivors, batchId)
+        }
         // cadence: READ-ONLY drift audit over the just-updated stored
         // index, landed under this epoch's own batch partition (replay
         // recomputes over identical stored state → identical rows →
         // idempotent overwrite). Retrain stays out-of-band — see the
-        // auditEvery scaladoc note.
-        auditEvery.filter(n => batchId % n == 0).foreach { _ =>
-          val mean = graft.operators.AnnIndex
-            .recallAudit(spark, annDir, auditQueries.get, auditNprobe)
+        // audit scaladoc note.
+        audit.filter(batchId % _.every == 0).foreach { a =>
+          val mean = AnnIndex.recallAudit(spark, annDir, a.queries, nprobe = 2)
             .agg(avg(col("recall")).as("mean_recall"),
               count(lit(1)).cast("long").as("n_queries"))
             .withColumn("audited_batch", lit(batchId))
-          graft.BatchSink.writeBatch(mean, batchId, auditDir.get, full = false)
+          graft.BatchSink.writeBatch(mean, batchId, a.dir, full = false)
         }
       }
     // Trigger.AvailableNow is the BACKFILL form (same note as
@@ -966,11 +806,11 @@ object EventStreams {
     graft.BatchSink.writeBatch(df, batchId, dir, full = false)
 
   /** Source schema for a file-stream relay. Inference requires at
-    * least one landed file; starting a relay AHEAD of its producer —
-    * the natural deploy order for a queue replacement — needs the
-    * schema passed explicitly (the `schema`/`relaySchema` parameter),
-    * and this error says so instead of the raw AnalysisException
-    * (review finding r14: the ordering constraint was undocumented).
+    * least one landed file; starting [[ingestRelay]] AHEAD of its
+    * producer — the natural deploy order for a queue replacement —
+    * needs its `schema` parameter, and this error says so instead of
+    * the raw AnalysisException (review finding r14: the ordering
+    * constraint was undocumented).
     */
   private def inferSourceSchema(spark: SparkSession, inputDir: String) =
     try spark.read.parquet(inputDir).schema
@@ -978,6 +818,7 @@ object EventStreams {
       case e: org.apache.spark.sql.AnalysisException =>
         throw new IllegalArgumentException(
           s"relay input $inputDir holds no parquet yet, so the source schema cannot be " +
-            "inferred — pass the schema parameter to start the relay before its producer", e)
+            "inferred — land a file first, or pass ingestRelay's schema parameter to start " +
+            "it before its producer", e)
     }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.operators.{AnnIndex, AnnLshIndex, DedupIndex}
+import graft.operators.{AnnIndex, AnnLshIndex, AnnPq, AnnPqStore, BpeStatsStore, DedupIndex,
+  DistinctSketch, LangModelStore, NbModelStore, SourceSketch}
 import graft.operators.TableAssertions.assertSameTable
 import graft.pipeline.{IngestPipeline, SparkTestSession}
 import org.apache.spark.sql.DataFrame
@@ -27,6 +28,18 @@ class StreamingIndexSpec extends AnyFunSuite {
     import s.implicits._
     Seq((id, s"src$id", "en", text.length.toLong, text))
       .toDF("doc_id", "source", "lang", "n_chars", "text")
+  }
+
+  /** Every data file under `table`, relative to it (`batch_id=N/...`),
+    * sorted: a write to any partition replaces or adds file names.
+    */
+  private def batchFiles(table: String): Seq[String] = {
+    val root = new org.apache.hadoop.fs.Path(table)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(root, true)
+    val prefix = fs.makeQualified(root).toString + "/"
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString)
+      .map(_.stripPrefix(prefix)).filter(_.startsWith("batch_id=")).toVector.sorted
   }
 
   test("crash between dedup accept and ANN add heals on restart; cross-batch dup dropped") {
@@ -76,12 +89,13 @@ class StreamingIndexSpec extends AnyFunSuite {
       .unionByName(doc(21, "tau upsilon phi chi psi omega"))
       .coalesce(1).write.mode("append").parquet(in)
 
+    val stores = Seq(AnnLshIndex.store(lshDir), AnnPqStore.store(pqDir),
+      SourceSketch.store(sketchDir), DistinctSketch.store(distinctDir),
+      NbModelStore.store(nbDir), LangModelStore.store(langDir), BpeStatsStore.store(bpeDir))
+
     // run 1: crash between batch 1's two index writes
-    val q1 = EventStreams.indexMaintenanceRelay(s, in, dedupDir, annDir, cp,
-      maxFilesPerTrigger = Some(1), lshDir = Some(lshDir),
-      sketchDir = Some(sketchDir), distinctSketchDir = Some(distinctDir),
-      nbModelDir = Some(nbDir), bpeStatsDir = Some(bpeDir),
-      langModelDir = Some(langDir), pqDir = Some(pqDir),
+    val q1 = EventStreams.indexMaintenanceRelay(s, in, DedupIndex.Dir(dedupDir), annDir, cp,
+      maxFilesPerTrigger = Some(1), stores = stores,
       betweenSinks = bid => if (bid == 1L) throw new RuntimeException("injected crash"))
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q1.processAllAvailable()
@@ -92,11 +106,8 @@ class StreamingIndexSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$annDir/cells").count() === 3L)
 
     // run 2: same checkpoint, no chaos — batch 1 replays, batch 2 runs
-    val q2 = EventStreams.indexMaintenanceRelay(s, in, dedupDir, annDir, cp,
-      maxFilesPerTrigger = Some(1), lshDir = Some(lshDir),
-      sketchDir = Some(sketchDir), distinctSketchDir = Some(distinctDir),
-      nbModelDir = Some(nbDir), bpeStatsDir = Some(bpeDir),
-      langModelDir = Some(langDir), pqDir = Some(pqDir))
+    val q2 = EventStreams.indexMaintenanceRelay(s, in, DedupIndex.Dir(dedupDir), annDir, cp,
+      maxFilesPerTrigger = Some(1), stores = stores)
     try q2.processAllAvailable() finally q2.stop()
 
     // survivors: doc 10 (batch 1) and doc 20 (batch 2); dups 11 and 21
@@ -178,9 +189,17 @@ class StreamingIndexSpec extends AnyFunSuite {
 
     // a FRESH checkpoint against the already-grown indexes restarts
     // epochs at 0 — the relay must refuse instead of dynamic-
-    // overwriting old batch partitions piecemeal
-    val q3 = EventStreams.indexMaintenanceRelay(s, in, dedupDir, annDir, s"$tmp/cp-fresh",
-      maxFilesPerTrigger = Some(1), lshDir = Some(lshDir))
+    // overwriting old batch partitions piecemeal, and it must refuse
+    // before it writes anything: every store's tables hold the same
+    // batch_id partitions, file for file, after the refused run
+    val tables = Seq(s"$dedupDir/fp", s"$dedupDir/bands", s"$annDir/cells",
+      s"$lshDir/vectors", s"$lshDir/stats", s"$pqDir/codes", sketchDir, distinctDir,
+      s"$nbDir/counts", s"$nbDir/priors", s"$langDir/counts", s"$langDir/priors", bpeDir)
+    def listing(): Seq[Seq[String]] = tables.map(batchFiles)
+    val before = listing()
+    assert(before.forall(_.exists(_.startsWith("batch_id=2/"))), s"listing: $before")
+    val q3 = EventStreams.indexMaintenanceRelay(s, in, DedupIndex.Dir(dedupDir), annDir,
+      s"$tmp/cp-fresh", maxFilesPerTrigger = Some(1), stores = stores)
     val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q3.processAllAvailable()
     }
@@ -189,6 +208,9 @@ class StreamingIndexSpec extends AnyFunSuite {
       .map(e => Option(e.getMessage).getOrElse("")).toSeq
     assert(msgs.exists(_.contains("Re-init the indexes")),
       s"stale-checkpoint guard must fire: $msgs")
+    tables.zip(before).zip(listing()).foreach { case ((t, b), a) =>
+      assert(a == b, s"the refused run changed $t's batch partitions: $b -> $a")
+    }
   }
 
   test("bucketed-dedup relay: crash heals on restart, cross-batch dup caught, guard fires") {
@@ -217,9 +239,9 @@ class StreamingIndexSpec extends AnyFunSuite {
         .coalesce(1).write.mode("append").parquet(in)
 
       // run 1: crash between the bucketed accept and the ANN add
-      val q1 = EventStreams.indexMaintenanceRelay(s, in, s"$tmp/unused-dedup", annDir, cp,
+      val q1 = EventStreams.indexMaintenanceRelay(s, in,
+        DedupIndex.Bucketed("srel_fp", "srel_bands"), annDir, cp,
         maxFilesPerTrigger = Some(1),
-        bucketedDedup = Some(("srel_fp", "srel_bands")),
         betweenSinks = bid => if (bid == 1L) throw new RuntimeException("injected crash"))
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         q1.processAllAvailable()
@@ -243,9 +265,9 @@ class StreamingIndexSpec extends AnyFunSuite {
       // run 2: same checkpoint — batch 1 replays (pinned read derives
       // the same survivors; acceptBucketed overwrites its own
       // partition), batch 2 runs
-      val q2 = EventStreams.indexMaintenanceRelay(s, in, s"$tmp/unused-dedup", annDir, cp,
-        maxFilesPerTrigger = Some(1),
-        bucketedDedup = Some(("srel_fp", "srel_bands")))
+      val q2 = EventStreams.indexMaintenanceRelay(s, in,
+        DedupIndex.Bucketed("srel_fp", "srel_bands"), annDir, cp,
+        maxFilesPerTrigger = Some(1))
       try q2.processAllAvailable() finally q2.stop()
 
       // the torn swap healed: live table back, pending marker cleared
@@ -267,9 +289,9 @@ class StreamingIndexSpec extends AnyFunSuite {
 
       // fresh checkpoint against the grown bucketed tables → the
       // table-partition stale-checkpoint guard must refuse
-      val q3 = EventStreams.indexMaintenanceRelay(s, in, s"$tmp/unused-dedup", annDir,
-        s"$tmp/cp-fresh", maxFilesPerTrigger = Some(1),
-        bucketedDedup = Some(("srel_fp", "srel_bands")))
+      val q3 = EventStreams.indexMaintenanceRelay(s, in,
+        DedupIndex.Bucketed("srel_fp", "srel_bands"), annDir, s"$tmp/cp-fresh",
+        maxFilesPerTrigger = Some(1))
       val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         q3.processAllAvailable()
       }
@@ -298,24 +320,35 @@ class StreamingIndexSpec extends AnyFunSuite {
     Thread.sleep(1200)
     doc(30, "zayin het tet yod kaf lamed").coalesce(1).write.mode("append").parquet(in)
 
+    // every store the relay can keep, under `root`: the monoid stores
+    // (sketches, NB, language, BPE) fold to their normal form in-stream
     def runRelay(suffix: String, hooks: Boolean): (String, String, String) = {
       val dedupDir = s"$tmp/dedup-$suffix"; val annDir = s"$tmp/ann-$suffix"
-      val lshDir = s"$tmp/lsh-$suffix"
+      val lshDir = s"$tmp/lsh-$suffix"; val root = s"$tmp/stores-$suffix"
       DedupIndex.init(corpus, dedupDir)
       AnnIndex.init(emb, annDir, quantizer = Some(AnnIndex.kmeans(emb, k = 2, iters = 2)))
       AnnLshIndex.init(emb, lshDir)
+      AnnPqStore.init(emb, s"$root/pq", codebooks = Some(AnnPq.codebooks(emb, baseId = 1L)))
+      SourceSketch.init(corpus, s"$root/sketch")
+      DistinctSketch.init(corpus, s"$root/distinct")
+      NbModelStore.init(corpus, s"$root/nbmodel")
+      LangModelStore.init(corpus, s"$root/langmodel")
+      BpeStatsStore.init(corpus, s"$root/bpestats")
       val auditQ = emb.limit(2).select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-      val q = EventStreams.indexMaintenanceRelay(s, in, dedupDir, annDir, s"$tmp/cp-$suffix",
-        maxFilesPerTrigger = Some(1), lshDir = Some(lshDir),
+      val q = EventStreams.indexMaintenanceRelay(s, in, DedupIndex.Dir(dedupDir), annDir,
+        s"$tmp/cp-$suffix", maxFilesPerTrigger = Some(1),
+        stores = Seq(AnnLshIndex.store(lshDir), AnnPqStore.store(s"$root/pq"),
+          SourceSketch.store(s"$root/sketch"), DistinctSketch.store(s"$root/distinct"),
+          NbModelStore.store(s"$root/nbmodel"), LangModelStore.store(s"$root/langmodel"),
+          BpeStatsStore.store(s"$root/bpestats")),
         compactEvery = if (hooks) Some(2) else None,
-        auditEvery = if (hooks) Some(2) else None,
-        auditQueries = if (hooks) Some(auditQ) else None,
-        auditDir = if (hooks) Some(s"$tmp/audit-$suffix") else None)
+        audit = if (hooks) Some(EventStreams.RecallAudit(2, auditQ, s"$tmp/audit-$suffix"))
+          else None)
       try q.processAllAvailable() finally q.stop()
-      (dedupDir, annDir, lshDir)
+      (annDir, lshDir, root)
     }
-    val (_, annPlain, lshPlain) = runRelay("plain", hooks = false)
-    val (_, annHooked, lshHooked) = runRelay("hooked", hooks = true)
+    val (annPlain, lshPlain, plain) = runRelay("plain", hooks = false)
+    val (annHooked, lshHooked, hooked) = runRelay("hooked", hooks = true)
 
     // search results are IDENTICAL with and without the cadence hooks
     val query = embedOf(doc(30, "zayin het tet yod kaf lamed"))
@@ -339,6 +372,28 @@ class StreamingIndexSpec extends AnyFunSuite {
     // bucket-stats, which accumulate partitions at the same rate)
     assert(graft.BatchSink.batchIds(s, s"$lshHooked/vectors").toSet == Set(1L, 2L, 3L))
     assert(graft.BatchSink.batchIds(s, s"$lshHooked/stats").toSet == Set(1L, 2L, 3L))
+
+    // the PQ codes fold by row and the monoid stores through their own
+    // folds: every read is unchanged by the in-stream fold, and every
+    // hooked table holds fewer batch partitions than its plain twin
+    val reads: Seq[(String, String => DataFrame)] = Seq(
+      "PQ codes" -> (r => AnnPqStore.readCodes(s, s"$r/pq")),
+      "source sketch" -> (r => SourceSketch.read(s, s"$r/sketch")),
+      "distinct sketch" -> (r => DistinctSketch.read(s, s"$r/distinct")),
+      "NB counts" -> (r => NbModelStore.readCounts(s, s"$r/nbmodel")),
+      "NB priors" -> (r => NbModelStore.readPriors(s, s"$r/nbmodel")),
+      "lang counts" -> (r => LangModelStore.readCounts(s, s"$r/langmodel")),
+      "lang priors" -> (r => LangModelStore.readPriors(s, s"$r/langmodel")),
+      "BPE counts" -> (r => BpeStatsStore.read(s, s"$r/bpestats")))
+    reads.foreach { case (what, read) =>
+      assertSameTable(read(plain), read(hooked), s"$what plain vs cadence-compacted")
+    }
+    Seq("pq/codes", "sketch", "distinct", "nbmodel/counts", "nbmodel/priors",
+      "langmodel/counts", "langmodel/priors", "bpestats").foreach { t =>
+      val (p, h) = (graft.BatchSink.batchIds(s, s"$plain/$t").toSet,
+        graft.BatchSink.batchIds(s, s"$hooked/$t").toSet)
+      assert(h.size < p.size, s"$t: hooked ids $h vs plain ids $p")
+    }
 
     // the audit landed exactly at the cadence epoch, read-only + sane
     val audit = s.read.parquet(s"$tmp/audit-hooked")
