@@ -22,6 +22,11 @@ import org.apache.spark.sql.functions._
   *    first: otherwise every task writes one file per partition value
   *    it holds (tasks × values small files — the classic partitioned-
   *    write failure mode at scale).
+  *
+  * Read-back contract: `batch_id` is a PARTITION column — partition type
+  * inference reads it as an integer at the END of the schema (only the
+  * `batch_id=N` directory name is stored). Select it by name and cast,
+  * never by position or assumed long type.
   */
 object BatchSink {
   def writeBatch(df: DataFrame, batchId: Long, path: String, full: Boolean,

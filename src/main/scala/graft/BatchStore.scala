@@ -61,19 +61,24 @@ object BatchTable {
 
 /** The one declaration of a persisted store kept current batch by batch:
   * its `batch_id` tables and how each folds, what a batch feeds it, and
-  * how a batch lands. The store module's quiesced `compact` and
-  * [[graft.streaming.EventStreams.indexMaintenanceRelay]]'s
+  * how a batch lands. The store module's quiesced `compact` and the
+  * relays' ([[graft.streaming.EventStreams.ingestRelay]],
+  * [[graft.streaming.EventStreams.indexMaintenanceRelay]])
   * stale-checkpoint guard, in-stream cadence and per-batch writes all
   * loop over it.
   *
-  * @param init   the call that builds the store, named when a table is missing
+  * @param init   the call that builds the store, named when a table is
+  *               missing; `None` for a store the relay creates with its
+  *               first batch. A store with an init partition (`batch_id`
+  *               0) lands relay epoch e at `batch_id` e+1, one without
+  *               lands it at e.
   * @param tables every table a batch lands a `batch_id` partition in
   * @param feed   which relation of a relay batch `add` takes
   * @param add    land one batch under its own `batch_id` partition
   *               (idempotent per id, so a replay overwrites its own rows)
   */
-final case class BatchStore(init: String, tables: Seq[BatchTable], feed: BatchStore.Feed,
-                            add: (DataFrame, Long) => Unit) {
+final case class BatchStore(init: Option[String], tables: Seq[BatchTable],
+                            feed: BatchStore.Feed, add: (DataFrame, Long) => Unit) {
   def compactBelow(spark: SparkSession, upTo: Long): Unit =
     tables.foreach(_.compactBelow(spark, upTo))
   def compact(spark: SparkSession): Unit = tables.foreach(_.compact(spark))
@@ -81,6 +86,9 @@ final case class BatchStore(init: String, tables: Seq[BatchTable], feed: BatchSt
 
 object BatchStore {
   sealed trait Feed
+
+  /** The relay's micro-batch as read from its input. */
+  case object Batch extends Feed
 
   /** The batch's dedup survivors: the documents the indexes accept. */
   case object Survivors extends Feed

@@ -512,7 +512,7 @@ object AnnIndex {
     * (init/retrain only), so it is not listed and never folds.
     */
   def store(dir: String): graft.BatchStore =
-    graft.BatchStore("AnnIndex.init", Seq(graft.BatchTable.Rows(s"$dir/cells", Seq("cell"))),
+    graft.BatchStore(Some("AnnIndex.init"), Seq(graft.BatchTable.Rows(s"$dir/cells", Seq("cell"))),
       graft.BatchStore.Vectors, (v, batchId) => addBatch(v.sparkSession, v, dir, batchId))
 
   /** Fold all `batch_id=N/cell=M` partitions of the inverted file into

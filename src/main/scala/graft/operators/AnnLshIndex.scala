@@ -297,7 +297,7 @@ object AnnLshIndex {
     * sum-invariant. Fed the embedded vectors.
     */
   def store(dir: String): graft.BatchStore =
-    graft.BatchStore("AnnLshIndex.init",
+    graft.BatchStore(Some("AnnLshIndex.init"),
       Seq(graft.BatchTable.Rows(s"$dir/vectors", Seq("sigp")),
         graft.BatchTable.Rows(s"$dir/stats")),
       graft.BatchStore.Vectors, (v, batchId) => addBatch(v.sparkSession, v, dir, batchId))

@@ -204,7 +204,7 @@ object AnnPqStore {
     * re-init), so they are not listed.
     */
   def store(dir: String): graft.BatchStore =
-    graft.BatchStore("AnnPqStore.init", Seq(graft.BatchTable.Rows(s"$dir/codes")),
+    graft.BatchStore(Some("AnnPqStore.init"), Seq(graft.BatchTable.Rows(s"$dir/codes")),
       graft.BatchStore.Vectors, (v, batchId) => addBatch(v.sparkSession, v, dir, batchId))
 
   /** Fold code batch partitions (quiesced, like every compact here). */

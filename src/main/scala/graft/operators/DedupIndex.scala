@@ -319,7 +319,7 @@ object DedupIndex {
     * folded by row, fed the accepted survivors through [[accept]].
     */
   def store(dir: String): graft.BatchStore =
-    graft.BatchStore("DedupIndex.init",
+    graft.BatchStore(Some("DedupIndex.init"),
       Seq(graft.BatchTable.Rows(s"$dir/fp"), graft.BatchTable.Rows(s"$dir/bands")),
       graft.BatchStore.Survivors, (docs, batchId) => accept(docs, dir, batchId))
 
@@ -357,7 +357,7 @@ object DedupIndex {
     */
   final case class Bucketed(fpTable: String, bandsTable: String) extends Backing {
     def store: graft.BatchStore =
-      graft.BatchStore("DedupIndex.initBucketed",
+      graft.BatchStore(Some("DedupIndex.initBucketed"),
         Seq(BucketedTable(fpTable), BucketedTable(bandsTable)), graft.BatchStore.Survivors,
         (docs, batchId) => acceptBucketed(docs, fpTable, bandsTable, batchId, heal = false))
     def survivors(incoming: DataFrame, batchId: Long): DataFrame =

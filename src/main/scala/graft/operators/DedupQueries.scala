@@ -186,9 +186,10 @@ object DedupQueries {
     val nRare = postings.select(explode(col("docs")).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_rare"))
     // (doc_id, n_sh, n_rare): a one-row-per-doc narrow relation — the
-    // candidate prune joins it on each side (AQE broadcasts it locally;
-    // at cluster scale it is a corpus-row two-long relation, the
-    // cheapest possible join side)
+    // candidate prune joins it on each side as the broadcast build side
+    // (a hint in prunedPairs: the planner sizes the candidates from the
+    // posting lists before their explode, and left alone it broadcast
+    // the candidates instead — 436k rows, 32 MiB, at sf0.1)
     val stats = docsSh.select(col("doc_id"), col("n_sh"))
       .join(nRare, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_sh"),
@@ -254,22 +255,28 @@ object DedupQueries {
       scores
     }
 
-  private def scoresOf(base: ShingleBase): DataFrame = {
+  /** The candidate pairs that survive the upper-bound prune; the per-doc
+    * stats are the broadcast side of both joins, never the candidates.
+    */
+  private[operators] def prunedPairs(base: ShingleBase): DataFrame = {
     val sa = base.stats.select(col("doc_id").as("doc_a"), col("n_sh").as("n_a"),
       (col("n_sh") - col("n_rare")).as("hot_a"))
     val sb = base.stats.select(col("doc_id").as("doc_b"), col("n_sh").as("n_b"),
       (col("n_sh") - col("n_rare")).as("hot_b"))
-    val pruned = base.cand.join(sa, Seq("doc_a")).join(sb, Seq("doc_b"))
+    base.cand.join(broadcast(sa), Seq("doc_a")).join(broadcast(sb), Seq("doc_b"))
       .withColumn("s_ub", least(
         col("shared_rare") + least(col("hot_a"), col("hot_b")),
         least(col("n_a"), col("n_b"))))
       .filter(col("s_ub") * 3 >= col("n_a") + col("n_b"))
       .select(col("doc_a"), col("doc_b"))
-      // eager: the prune output is referenced by THREE plan branches
-      // (both survivor-doc unions and the verify join) — without
-      // materialization Spark re-executes the whole candidate subtree
-      // per branch (measured 14 s vs 1.5 s at sf0.1)
-      .localCheckpoint()
+  }
+
+  private def scoresOf(base: ShingleBase): DataFrame = {
+    // eager: the prune output is referenced by THREE plan branches
+    // (both survivor-doc unions and the verify join) — without
+    // materialization Spark re-executes the whole candidate subtree
+    // per branch (measured 14 s vs 1.5 s at sf0.1)
+    val pruned = prunedPairs(base).localCheckpoint()
     // full-set verify only over the pruned sliver's documents: semi-
     // filter the array relation (survivor list is tiny → broadcast side)
     // so no corpus-sized array shuffle ever happens

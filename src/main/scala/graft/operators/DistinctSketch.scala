@@ -73,7 +73,7 @@ object DistinctSketch {
     * rows per source, same schema), fed the accepted survivors.
     */
   def store(dir: String): graft.BatchStore =
-    graft.BatchStore("DistinctSketch.init",
+    graft.BatchStore(Some("DistinctSketch.init"),
       Seq(graft.BatchTable.Monoid(dir,
         kept(_).select(col("source"), explode(col("kept")).as("h")))),
       graft.BatchStore.Survivors, (docs, batchId) => addBatch(docs, dir, batchId))

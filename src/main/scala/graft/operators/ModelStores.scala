@@ -110,7 +110,7 @@ object NbModelStore {
     * tables, each folded through its sums, fed the accepted survivors.
     */
   def store(dir: String): graft.BatchStore =
-    graft.BatchStore("NbModelStore.init",
+    graft.BatchStore(Some("NbModelStore.init"),
       Seq(graft.BatchTable.Monoid(s"$dir/counts", foldCounts),
         graft.BatchTable.Monoid(s"$dir/priors", foldPriors)),
       graft.BatchStore.Survivors, (docs, batchId) => addBatch(docs, dir, batchId))
@@ -185,7 +185,7 @@ object LangModelStore {
     * [[NbModelStore.store]].
     */
   def store(dir: String): graft.BatchStore =
-    graft.BatchStore("LangModelStore.init",
+    graft.BatchStore(Some("LangModelStore.init"),
       Seq(graft.BatchTable.Monoid(s"$dir/counts", foldCounts),
         graft.BatchTable.Monoid(s"$dir/priors", foldPriors)),
       graft.BatchStore.Survivors, (docs, batchId) => addBatch(docs, dir, batchId))
@@ -243,7 +243,7 @@ object BpeStatsStore {
     * folded through its sums, fed the accepted survivors.
     */
   def store(dir: String): graft.BatchStore =
-    graft.BatchStore("BpeStatsStore.init", Seq(graft.BatchTable.Monoid(dir, foldRows)),
+    graft.BatchStore(Some("BpeStatsStore.init"), Seq(graft.BatchTable.Monoid(dir, foldRows)),
       graft.BatchStore.Survivors, (docs, batchId) => addBatch(docs, dir, batchId))
 
   /** MONOID compaction (r15): the vocab table folds to one row per

@@ -86,7 +86,7 @@ object SourceSketch {
     * sketch tracks the corpus the indexes hold, not raw arrivals.
     */
   def store(dir: String): graft.BatchStore =
-    graft.BatchStore("SourceSketch.init", Seq(graft.BatchTable.Monoid(dir, foldRows)),
+    graft.BatchStore(Some("SourceSketch.init"), Seq(graft.BatchTable.Monoid(dir, foldRows)),
       graft.BatchStore.Survivors, (docs, batchId) => addBatch(docs, dir, batchId))
 
   /** MONOID compaction (r15): fold landed partitions through the

@@ -30,22 +30,6 @@ import org.apache.spark.sql.types._
   */
 object IngestPipeline {
 
-  /** Vector-store row schema (the K1 payload contract mirrors
-    * tasks/process_embedding.py:387-399).
-    */
-  val pointSchema: StructType = StructType(Seq(
-    StructField("point_id", StringType, nullable = false),
-    StructField("embedding", ArrayType(FloatType, containsNull = false)),
-    StructField("source_drive_file", LongType),
-    StructField("source_title", StringType),
-    StructField("chunk_index", LongType),
-    StructField("total_chunks", LongType),
-    StructField("text", StringType),          // truncated payload copy
-    StructField("original_text", StringType),
-    StructField("context_prefix", StringType),
-    StructField("detected_languages", StringType)
-  ))
-
   /** THE F10/F2 predicates with their null discipline — ONE definition
     * behind [[ingestFilter]], [[ledger]] and [[ledgerStages]] (review
     * finding r15: three hand copies of these expressions had already

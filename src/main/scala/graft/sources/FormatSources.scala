@@ -110,6 +110,17 @@ object DocxCodec extends Serializable {
   private val WNs = "http://schemas.openxmlformats.org/wordprocessingml/2006/main"
   private val McNs = "http://schemas.openxmlformats.org/markup-compatibility/2006"
 
+  /** One configured StAX factory per thread (factories are not
+    * thread-safe, and `newInstance` repeats a JAXP service lookup over
+    * the classpath on every call). DTDs and external entities stay off.
+    */
+  private val xmlFactory = ThreadLocal.withInitial[javax.xml.stream.XMLInputFactory] { () =>
+    val f = javax.xml.stream.XMLInputFactory.newInstance()
+    f.setProperty(javax.xml.stream.XMLInputFactory.SUPPORT_DTD, false)
+    f.setProperty(javax.xml.stream.XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
+    f
+  }
+
   /** Parse body paragraphs the way python-docx's `document.paragraphs`
     * does (review finding r15 — the bare local-name match diverged on
     * real Word output): only elements in the WORDPROCESSINGML namespace
@@ -126,10 +137,7 @@ object DocxCodec extends Serializable {
     * body's text once".
     */
   private def parseDocumentXml(in: java.io.InputStream): String = {
-    val f = javax.xml.stream.XMLInputFactory.newInstance()
-    f.setProperty(javax.xml.stream.XMLInputFactory.SUPPORT_DTD, false)
-    f.setProperty(javax.xml.stream.XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    val r = f.createXMLStreamReader(in)
+    val r = xmlFactory.get.createXMLStreamReader(in)
     val paragraphs = Vector.newBuilder[String]
     val cur = new StringBuilder
     var total = 0L // across ALL paragraphs — the per-p buffer resets

@@ -299,6 +299,19 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin"), p.take(800))
   }
 
+  test("dedup candidate prune: the per-doc stats are the broadcast build side") {
+    // the candidates can be far larger than the stats; the planner sizes
+    // them from the posting lists before their explode, so without the
+    // hints it may broadcast the candidates (BuildLeft) instead
+    val base = DedupQueries.buildShingleBase(graft.Tables.documents(spark, d))
+    val pruned = DedupQueries.prunedPairs(base)
+    pruned.collect()
+    val p = pruned.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    val joins = p.linesIterator.filter(_.contains("BroadcastHashJoin")).toSeq
+    assert(joins.size == 2 && joins.forall(_.contains("BuildRight")), p.take(1500))
+    assert(!p.contains("BuildLeft") && !p.contains("SortMergeJoin"), p.take(1500))
+  }
+
   test("WHOLE SURFACE: no query plans a CartesianProduct (all cross joins broadcast)") {
     // The per-query guards above pin named scale-sensitive plans; this
     // sweep pins the one property that must hold EVERYWHERE — every one

@@ -42,6 +42,49 @@ class DocxCodecSpec extends AnyFunSuite {
     assert(DocxCodec.extractText(bos.toByteArray) == "col1\tcol2\nline2")
   }
 
+  /** A .docx holding only the given `word/document.xml`. */
+  private def docxOf(documentXml: String): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val zip = new java.util.zip.ZipOutputStream(bos)
+    zip.putNextEntry(new java.util.zip.ZipEntry("word/document.xml"))
+    zip.write(documentXml.getBytes("UTF-8")); zip.closeEntry(); zip.close()
+    bos.toByteArray
+  }
+
+  test("an external entity in document.xml is never expanded") {
+    // XXE: an upload must not read the extracting host's files. The
+    // parser either refuses the reference (the file drops as corrupt)
+    // or leaves it unexpanded; run twice so a reused per-thread parser
+    // factory is covered as well as a fresh one.
+    val secret = java.nio.file.Files.createTempFile("graft-xxe", ".txt")
+    java.nio.file.Files.write(secret, "xxe-secret-payload".getBytes("UTF-8"))
+    val W = "http://schemas.openxmlformats.org/wordprocessingml/2006/main"
+    val doc =
+      s"""<?xml version="1.0"?><!DOCTYPE w:document [<!ENTITY xxe SYSTEM "${secret.toUri}">]>""" +
+        s"""<w:document xmlns:w="$W"><w:body>""" +
+        """<w:p><w:r><w:t>before &xxe; after</w:t></w:r></w:p></w:body></w:document>"""
+    for (_ <- 1 to 2) {
+      scala.util.Try(DocxCodec.extractText(docxOf(doc))).foreach { text =>
+        assert(!text.contains("xxe-secret-payload"), s"entity expanded: $text")
+      }
+    }
+    assert(DocxCodec.extractText(DocxCodec.write(Seq("after the entity"))) == "after the entity")
+  }
+
+  test("extraction from several threads at once equals sequential extraction") {
+    val rnd = new scala.util.Random(11)
+    val docs = (1 to 200).map { i =>
+      DocxCodec.write(Seq.fill(1 + rnd.nextInt(4))(
+        s"doc $i " + Seq.fill(1 + rnd.nextInt(30))(rnd.alphanumeric.take(6).mkString).mkString(" ")))
+    }
+    val sequential = docs.map(DocxCodec.extractText)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val tasks = docs.map(d => pool.submit(() => DocxCodec.extractText(d)))
+      assert(tasks.map(_.get()) == sequential)
+    } finally pool.shutdown()
+  }
+
   test("seeded fuzz: 300 random strings (xml specials/tabs/unicode) round-trip") {
     // no '\n' in the pool: the "\n\n" paragraph join makes embedded
     // newlines content-ambiguous by the format's own contract

@@ -480,4 +480,81 @@ class EventStreamsSpec extends AnyFunSuite {
     qa2.awaitTermination()
     assert(s.read.parquet(s"$tmp/outA").count() == before)
   }
+
+  test("ingestRelay on a fresh checkpoint over landed stores is refused before it writes") {
+    // a fresh checkpoint restarts epochs at 0: the relay would re-read
+    // every input file as batch 0 and store each point of a later batch
+    // a second time beside its landed copy. The guard must refuse the
+    // epoch before any write, with or without the ledger store.
+    val s = spark
+    import s.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-fresh-cp").toString
+    val in = s"$tmp/in"; val out = s"$tmp/out"; val led = s"$tmp/ledger"
+    Seq((1L, "alpha beta gamma delta epsilon"), (2L, "zeta eta theta iota kappa lambda"))
+      .foreach { case (id, text) =>
+        Seq((id, s"src$id", "en", text.length.toLong, text))
+          .toDF("doc_id", "source", "lang", "n_chars", "text").write.mode("append").parquet(in)
+      }
+    val q1 = EventStreams.ingestRelay(s, in, out, s"$tmp/cp", ledgerDir = Some(led),
+      maxFilesPerTrigger = Some(1))
+    try q1.processAllAvailable() finally q1.stop()
+
+    def listing(): Seq[Seq[(String, Long, Long)]] = Seq(out, led).map { dir =>
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val it = fs.listFiles(root, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted
+    }
+    val before = listing()
+    assert(before.forall(_.exists(_._1.contains("/batch_id=1/"))), s"listing: $before")
+    Seq(None, Some(led)).zipWithIndex.foreach { case (ledgerDir, i) =>
+      val q = EventStreams.ingestRelay(s, in, out, s"$tmp/cp-fresh$i", ledgerDir = ledgerDir)
+      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      q.stop()
+      val msgs = Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null).take(10)
+        .map(e => Option(e.getMessage).getOrElse("")).toSeq
+      assert(msgs.exists(_.contains("ingestRelay: table")) &&
+        msgs.exists(_.contains("Re-init the indexes")),
+        s"stale-checkpoint guard must fire (ledger $ledgerDir): $msgs")
+      assert(listing() == before, s"the refused run (ledger $ledgerDir) changed a table")
+    }
+  }
+
+  test("ingestRelay reads each micro-batch once: input rows = documents, sinks = batch run") {
+    // the points lineage and the ledger share one persisted scan, so
+    // stream progress counts every document once
+    val s = spark
+    import s.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-one-scan").toString
+    val in = s"$tmp/in"; val out = s"$tmp/out"; val led = s"$tmp/ledger"
+    val n = 12
+    (1 to n).map { i =>
+      val text = s"doc $i " + Seq.tabulate(40)(j => s"w${i * j}").mkString(" ")
+      (i.toLong, s"src$i", "en", text.length.toLong, text)
+    }.toDF("doc_id", "source", "lang", "n_chars", "text").coalesce(1).write.parquet(in)
+    val q = EventStreams.ingestRelay(s, in, out, s"$tmp/cp", ledgerDir = Some(led))
+    val inputRows = try {
+      q.processAllAvailable()
+      q.recentProgress.map(_.numInputRows).sum
+    } finally q.stop()
+    assert(inputRows == n, s"stream progress read $inputRows input rows for $n documents")
+
+    val batch = s.read.parquet(in)
+    def idsAndTexts(df: org.apache.spark.sql.DataFrame) =
+      df.select("point_id", "text").collect().map(r => r.getString(0) -> r.getString(1)).toSet
+    val expected = idsAndTexts(graft.pipeline.IngestPipeline.run(batch))
+    assert(expected.nonEmpty)
+    assert(idsAndTexts(s.read.parquet(out)) == expected)
+    val ledgerCols = Seq("source_drive_file", "file_title", "stage_seq", "status",
+      "progress_percent", "error_message")
+    def ledgerRows(df: org.apache.spark.sql.DataFrame) =
+      df.select(ledgerCols.map(col): _*).collect().map(_.toSeq).toSeq
+        .sortBy(r => (r.head.asInstanceOf[Long], r(2).asInstanceOf[Long]))
+    val expectedLedger = ledgerRows(graft.pipeline.IngestPipeline.ledgerStages(batch))
+    assert(expectedLedger.size == 7 * n)
+    assert(ledgerRows(s.read.parquet(led)) == expectedLedger)
+  }
 }
